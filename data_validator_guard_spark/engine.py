@@ -10,13 +10,16 @@ Reference semantics being rebuilt (SURVEY.md §2.12, §3):
 
 Execution strategy (the part the reference could not have — SURVEY.md §4):
 
-1. **One fused totals scan.** ``groupBy(partition).agg(n_rows, *table-level
+1. **One fused totals scan.** ``groupBy(*grain).agg(n_rows, *table-level
    measures, *row-rule violation counters)`` — every row-level rule's
    violation count is a ``sum(when(cond,1))`` in the SAME aggregation as the
    table-level measures (the one good idea in the reference —
    `maganamed_validation.py:100-134` fuses two checks into one scan — applied
    universally), so verdicts for row+agg rules cost exactly one pass and
-   Catalyst prunes the read to the union of rule-referenced columns.
+   Catalyst prunes the read to the union of rule-referenced columns. The
+   grain is the partition, plus the drift group and value bucket when the
+   suite has a drift rule; a second, tiny aggregation merges the grain's
+   decomposable measures per partition.
 2. **One violation scan, only when violations are sunk.** Row-level violation
    *rows* come from a separate fused pass: an array-of-structs
    ``filter``+``explode`` emits all violating (rule, row) pairs in one
@@ -31,9 +34,9 @@ Execution strategy (the part the reference could not have — SURVEY.md §4):
    union is persisted by default and shared between the two outputs.
 
 Operator choices:
-- **unique**: salted two-phase hash aggregation (north rule): phase 1 groups
-  on (keys, salt) so a hot key's rows spread over many reducers, phase 2
-  merges partial counts. Exact result, skew defused.
+- **unique**: one hash aggregation counting (partition, key hash), then an
+  exact count of the candidate keys (north rule). The map-side partial count
+  combines a hot key within each task, so skew needs no salt.
 - **foreign_key**: broadcast left-anti join (`general_validation.py:94-108`
   was a Python set difference).
 - **group_consistency**: exact distinct-count per group — an explicit,
@@ -52,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from data_validator_guard_spark.functions import is_blank, normalized
+from data_validator_guard_spark.operators.uniqueness import duplicate_keys
 from data_validator_guard_spark.rules import (
     AGG_LEVEL_TYPES,
     ROW_LEVEL_TYPES,
@@ -61,8 +65,6 @@ from data_validator_guard_spark.rules import (
 
 VERDICT_COLS = ("rule_id", "partition", "pass", "n_rows", "n_violations")
 VIOLATION_COLS = ("rule_id", "partition", "keys", "detail")
-
-DEFAULT_N_SALTS = 64
 
 
 # ---------------------------------------------------------------- row level
@@ -158,33 +160,55 @@ def _row_violation(rule: Rule) -> tuple[Column, Column]:
     raise ValueError(f"not a row-level rule: {t}")
 
 
-def _agg_measures(rule: Rule) -> tuple[Column, Column]:
-    """Compile a table-level rule to (n_violations_expr, pass_expr) aggregates
-    evaluated inside the fused totals pass."""
+def _agg_measures(rule: Rule, name: str) -> tuple[list[Column], Column, Column]:
+    """Compile a table-level rule to ``(fine aggs, n_violations, pass)``.
+
+    The totals are two aggregations: the fine aggs (aliased ``name``) run
+    over the grain of the totals scan, and ``n_violations`` / ``pass``
+    re-aggregate the fine rows per partition. Every measure decomposes:
+    counters sum, approximate cardinality merges HLL sketches. Exact
+    cardinality has no fine agg: it reads the per-partition count that
+    :func:`_exact_cardinality` joins in as ``name``. ``__n`` is the fine row
+    count."""
     p = rule.params
     t = rule.type
+    n_rows = F.sum("__n")
     if t == "null_rate_max":
-        blanks = F.sum(is_blank(rule.columns[0]).cast("bigint"))
-        rate = blanks / F.count(F.lit(1))
-        return blanks, rate <= F.lit(float(p["max_rate"]))
+        fine = [F.sum(is_blank(rule.columns[0]).cast("bigint")).alias(name)]
+        blanks = F.sum(name)
+        return fine, blanks.cast("bigint"), blanks / n_rows <= F.lit(float(p["max_rate"]))
     if t == "min_rows":
-        n = F.count(F.lit(1))
-        ok = n >= F.lit(int(p["n"]))
-        return F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint"), ok
+        ok = n_rows >= F.lit(int(p["n"]))
+        return [], F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint"), ok
     if t == "cardinality_range":
-        exact = p.get("exact", False)
-        card = (
-            F.count_distinct(F.col(rule.columns[0]))
-            if exact
-            else F.approx_count_distinct(F.col(rule.columns[0]), rsd=p.get("rsd", 0.01))
-        )
+        c = F.col(rule.columns[0])
+        if p.get("exact", False):
+            fine = []
+            card = F.max(name)  # one value per partition
+        else:
+            # the sketch takes INT/BIGINT/STRING/BINARY only
+            fine = [F.hll_sketch_agg(c.cast("string")).alias(name)]
+            card = F.hll_sketch_estimate(F.hll_union_agg(name))
         lo = int(p.get("lo", 0))
         hi = p.get("hi")
         ok = card >= F.lit(lo)
         if hi is not None:
             ok = ok & (card <= F.lit(int(hi)))
-        return F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint"), ok
+        return fine, F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint"), ok
     raise ValueError(f"not an agg-level rule: {t}")
+
+
+def _exact_cardinality(df: DataFrame, rule: Rule, part: Column, name: str) -> DataFrame:
+    """``partition, name``: the exact number of distinct non-NULL values of
+    the rule's column per partition, as its own distinct aggregation, so no
+    single row ever holds a partition's value set."""
+    c = rule.columns[0]
+    return (
+        df.select(part.alias("partition"), F.col(c))
+        .distinct()
+        .groupBy("partition")
+        .agg(F.count(c).alias(name))
+    )
 
 
 # ---------------------------------------------------------------- plan level
@@ -192,21 +216,20 @@ def _agg_measures(rule: Rule) -> tuple[Column, Column]:
 #   rule_id, partition, keys, detail, weight  (weight = offending-row count)
 
 
-def _unique_violations(df: DataFrame, rule: Rule, part: Column, n_salts: int) -> DataFrame:
-    """Salted duplicate detection (SURVEY.md §4.3; north rule).
+def _unique_violations(df: DataFrame, rule: Rule, part: Column) -> DataFrame:
+    """Duplicate detection (SURVEY.md §4.3; north rule).
     weight = group size, matching the reference's ``duplicated(keep=False)``
     row count (`general_validation.py:19-27`).
 
-    Default mode ``hash``: shuffle only (partition, xxhash64(keys), salt) —
-    8-byte hashes instead of full key strings (at (repo, path, commit) width
-    this cuts the exchange ~6x) — then broadcast the (assumed-few) duplicate
-    hashes back and verify exactly on the matching rows, so hash collisions
-    can only create candidates, never false violations. The salt (physical
-    input split id) spreads a hot key's partial counts across reducers.
+    Default mode ``hash``: count (partition, xxhash64(keys)) — 8-byte hashes
+    instead of full key strings (at (repo, path, commit) width this cuts the
+    exchange ~6x) — then broadcast the (assumed-few) duplicate hashes back
+    and count the full keys of the matching rows only, so hash collisions can
+    only create candidates, never false violations.
 
-    Mode ``shuffle`` (``params={"mode": "shuffle"}``): classic salted
-    two-phase aggregation on the full key — for pathological inputs where
-    duplicates are a large fraction and the hash broadcast would be big.
+    Mode ``shuffle`` (``params={"mode": "shuffle"}``): count the full keys of
+    every row — for pathological inputs where duplicates are a large fraction
+    and the hash broadcast would be big.
     """
     norm = rule.type == "unique_normalized"
     keyexprs = [
@@ -214,44 +237,17 @@ def _unique_violations(df: DataFrame, rule: Rule, part: Column, n_salts: int) ->
         for i, c in enumerate(rule.columns)
     ]
     keynames = [f"__k{i}" for i in range(len(rule.columns))]
-    mode = rule.params.get("mode", "hash")
-
-    if mode == "hash":
-        hashed = df.select(part.alias("partition"), *keyexprs).select(
-            "partition",
-            *keynames,
-            F.xxhash64(*[F.col(k) for k in keynames]).alias("__h"),
-        )
-        salted = hashed.select("partition", "__h").withColumn(
-            "__salt", F.pmod(F.spark_partition_id(), F.lit(n_salts))
-        )
-        phase1 = salted.groupBy("partition", "__h", "__salt").agg(
-            F.count(F.lit(1)).alias("__c")
-        )
+    keyed = df.select(part.alias("partition"), *keyexprs)
+    if rule.params.get("mode", "hash") == "hash":
+        keyed = keyed.withColumn("__h", F.xxhash64(*keynames))
         dup_h = (
-            phase1.groupBy("partition", "__h")
-            .agg(F.sum("__c").alias("__n"))
+            keyed.groupBy("partition", "__h")
+            .agg(F.count(F.lit(1)).alias("__n"))
             .filter(F.col("__n") > 1)
             .select("partition", "__h")
         )
-        dup_keys = (
-            hashed.join(F.broadcast(dup_h), ["partition", "__h"], "left_semi")
-            .groupBy("partition", *keynames)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-        )
-    else:
-        salted = df.select(part.alias("partition"), *keyexprs).withColumn(
-            "__salt", F.pmod(F.spark_partition_id(), F.lit(n_salts))
-        )
-        phase1 = salted.groupBy("partition", *keynames, "__salt").agg(
-            F.count(F.lit(1)).alias("__c")
-        )
-        dup_keys = (
-            phase1.groupBy("partition", *keynames)
-            .agg(F.sum("__c").alias("n"))
-            .filter(F.col("n") > 1)
-        )
+        keyed = keyed.join(F.broadcast(dup_h), ["partition", "__h"], "left_semi")
+    dup_keys = duplicate_keys(keyed, ["partition", *keynames])
     return dup_keys.select(
         F.lit(rule.rule_id).alias("rule_id"),
         F.col("partition"),
@@ -425,7 +421,6 @@ def _group_consistency_violations(df: DataFrame, rule: Rule, part: Column) -> Da
 def validate(
     df: DataFrame,
     suite: RuleSuite,
-    n_salts: int = DEFAULT_N_SALTS,
     persist_violations: bool = True,
     violation_sample_ppm: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -527,91 +522,47 @@ def validate(
         compiled_rows.append((r, _guard(r, cond), detail))
     row_rules = row_rules + fk_inline
 
-    # When exactly one drift rule is present (the north-rule shape), the
-    # totals scan groups by (partition, drift group, length bucket) instead of
-    # partition alone: the drift rule's *current histogram falls out of the
-    # same pass* (no second scan of the heavy value column), and the totals
-    # re-aggregate from the tiny fine-grained result. Requires every measure
-    # to be decomposable — counters re-aggregate by SUM, cardinality switches
-    # from approx_count_distinct to a mergeable HLL sketch
-    # (hll_sketch_agg → hll_union_agg → hll_sketch_estimate). Rules with
-    # exact cardinality fall back to the direct path.
-    fuse_drift = len(drift_rules) == 1 and not any(
-        r.type == "cardinality_range" and r.params.get("exact") for r in agg_rules
-    )
-    drift_cur: DataFrame | None = None
-    if fuse_drift:
+    # The totals are two aggregations: ``df.groupBy(*grain).agg(fine)``, then
+    # ``fine.groupBy("partition").agg(final)``. With a drift rule the grain is
+    # (partition, drift group, value bucket), so the first drift rule's
+    # current histogram falls out of the same pass (no second scan of the
+    # heavy value column); without one it is the partition alone. Every
+    # measure decomposes (see _agg_measures), so both grains give the same
+    # totals. Each exact cardinality rule adds its own distinct aggregation,
+    # joined in per partition before the second aggregation.
+    grain = [part.alias("partition")]
+    if drift_rules:
         from data_validator_guard_spark.operators.drift import bucketize
 
-        dr = drift_rules[0]
-        fine_aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
-        final_aggs: list[Column] = [F.sum("__n").alias("__n_rows")]
-        n_rows_final = F.sum("__n")
-        for i, r in enumerate(agg_rules):
-            p = r.params
-            if r.type == "null_rate_max":
-                fine_aggs.append(
-                    F.sum(is_blank(r.columns[0]).cast("bigint")).alias(f"__f{i}")
-                )
-                blanks = F.sum(f"__f{i}")
-                final_aggs.append(blanks.cast("bigint").alias(f"__v_{r.rule_id}"))
-                final_aggs.append(
-                    (blanks / n_rows_final <= F.lit(float(p["max_rate"]))).alias(
-                        f"__p_{r.rule_id}"
-                    )
-                )
-            elif r.type == "min_rows":
-                ok = n_rows_final >= F.lit(int(p["n"]))
-                final_aggs.append(
-                    F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint").alias(f"__v_{r.rule_id}")
-                )
-                final_aggs.append(ok.alias(f"__p_{r.rule_id}"))
-            elif r.type == "cardinality_range":
-                fine_aggs.append(F.hll_sketch_agg(F.col(r.columns[0])).alias(f"__f{i}"))
-                card = F.hll_sketch_estimate(F.hll_union_agg(F.col(f"__f{i}")))
-                lo, hi = int(p.get("lo", 0)), p.get("hi")
-                ok = card >= F.lit(lo)
-                if hi is not None:
-                    ok = ok & (card <= F.lit(int(hi)))
-                final_aggs.append(
-                    F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("bigint").alias(f"__v_{r.rule_id}")
-                )
-                final_aggs.append(ok.alias(f"__p_{r.rule_id}"))
-            else:  # pragma: no cover - AGG_LEVEL_TYPES is closed
-                raise ValueError(f"not an agg-level rule: {r.type}")
-        for r, cond, _detail in compiled_rows:
-            fine_aggs.append(
-                F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).cast("bigint").alias(f"__fv_{r.rule_id}")
-            )
-            final_aggs.append(F.sum(f"__fv_{r.rule_id}").cast("bigint").alias(f"__v_{r.rule_id}"))
-        fine = df.groupBy(
-            part.alias("partition"),
-            F.col(dr.params["group_by"]).alias("__grp"),
-            bucketize(F.expr(dr.params["value"]), dr.params["edges"]).alias("__bucket"),
-        ).agg(*fine_aggs)
+        dp = drift_rules[0].params
+        grain += [
+            F.col(dp["group_by"]).alias("__grp"),
+            bucketize(F.expr(dp["value"]), dp["edges"]).alias("__bucket"),
+        ]
+    fine_aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
+    final_aggs: list[Column] = [F.sum("__n").alias("__n_rows")]
+    exact_cards: list[DataFrame] = []
+    for i, r in enumerate(agg_rules):
+        measures, n_viol, ok = _agg_measures(r, f"__f{i}")
+        fine_aggs += measures
+        final_aggs += [n_viol.alias(f"__v_{r.rule_id}"), ok.alias(f"__p_{r.rule_id}")]
+        if r.type == "cardinality_range" and r.params.get("exact", False):
+            exact_cards.append(_exact_cardinality(df, r, part, f"__f{i}"))
+    for r, cond, _detail in compiled_rows:
+        fine_aggs.append(
+            F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).cast("bigint").alias(f"__fv_{r.rule_id}")
+        )
+        final_aggs.append(F.sum(f"__fv_{r.rule_id}").cast("bigint").alias(f"__v_{r.rule_id}"))
+    fine = df.groupBy(*grain).agg(*fine_aggs)
+    if drift_rules and persist_violations:
         # the fine histogram feeds BOTH totals and the drift fragment; persist
         # it only when the caller wants shared/cached state (same contract as
         # the fragment union below) — verdict-only runs leave no cached RDDs.
-        if persist_violations:
-            fine = fine.persist(StorageLevel.MEMORY_AND_DISK)
-        totals = fine.groupBy("partition").agg(*final_aggs)
-        drift_cur = fine.select(
-            "partition",
-            F.col("__grp").alias("grp"),
-            F.col("__bucket").alias("bucket"),
-            F.col("__n").alias("n"),
-        )
-    else:
-        aggs: list[Column] = [F.count(F.lit(1)).alias("__n_rows")]
-        for r in agg_rules:
-            n_viol, ok = _agg_measures(r)
-            aggs.append(n_viol.alias(f"__v_{r.rule_id}"))
-            aggs.append(ok.alias(f"__p_{r.rule_id}"))
-        for r, cond, _detail in compiled_rows:
-            aggs.append(
-                F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).cast("bigint").alias(f"__v_{r.rule_id}")
-            )
-        totals = df.groupBy(part.alias("partition")).agg(*aggs)
+        fine = fine.persist(StorageLevel.MEMORY_AND_DISK)
+    per_partition = fine
+    for card in exact_cards:
+        per_partition = per_partition.join(card, "partition", "left")
+    totals = per_partition.groupBy("partition").agg(*final_aggs)
 
     # ---- violations: one fused scan for all row-level rules (executed only
     # when the violations output is sunk), plus one fragment per plan-level
@@ -641,17 +592,29 @@ def validate(
     else:
         row_fragment = None
     for r in unique_rules:
-        fragments.append(_unique_violations(df, r, part, n_salts))
+        fragments.append(_unique_violations(df, r, part))
     for r in fk_rules:
         fragments.append(_foreign_key_violations(df, r, part, keys))
     for r in gc_rules:
         fragments.append(_group_consistency_violations(df, r, part))
     for r in jc_rules:
         fragments.append(_join_consistency_violations(df, r, part, keys))
-    for r in drift_rules:
+    for i, r in enumerate(drift_rules):
         from data_validator_guard_spark.operators.drift import drift_violations
 
-        fragments.append(drift_violations(df, r, part, cur=drift_cur))
+        # only the first drift rule shares the totals grain; the others
+        # build their own histogram
+        cur = (
+            fine.select(
+                "partition",
+                F.col("__grp").alias("grp"),
+                F.col("__bucket").alias("bucket"),
+                F.col("__n").alias("n"),
+            )
+            if i == 0
+            else None
+        )
+        fragments.append(drift_violations(df, r, part, cur=cur))
 
     empty_w = spark.createDataFrame(
         [], "rule_id string, partition string, keys string, detail string, weight bigint"
@@ -809,7 +772,6 @@ def report(verdicts: DataFrame, violations: DataFrame) -> tuple[DataFrame, DataF
 
 def validate_many(
     suites: "dict[str, tuple[DataFrame, RuleSuite]]",
-    n_salts: int = DEFAULT_N_SALTS,
 ) -> tuple[DataFrame, DataFrame]:
     """Validate several tables in one run — the reference's ``main()`` walks
     every configured table through its per-table checks
@@ -820,7 +782,7 @@ def validate_many(
     all_v: DataFrame | None = None
     all_x: DataFrame | None = None
     for tname, (df, suite) in suites.items():
-        v, x = validate(df, suite, n_salts=n_salts)
+        v, x = validate(df, suite)
         v = v.select(F.lit(tname).alias("table"), *VERDICT_COLS)
         x = x.select(F.lit(tname).alias("table"), *VIOLATION_COLS)
         all_v = v if all_v is None else all_v.unionByName(v)

@@ -71,7 +71,6 @@ def run_with_ledger(
     out_dir: str,
     snapshot_id: str,
     rule_version: str,
-    n_salts: int = 64,
     violation_sample_ppm: int | None = None,
     stats_columns: list[str] | None = None,
 ) -> dict[str, int]:
@@ -97,9 +96,7 @@ def run_with_ledger(
     # violation_sample_ppm bounds the EMITTED violation rows (engine.validate
     # docstring); ledger rows_failed comes from verdict counters, so resume
     # accounting stays exact under sampling.
-    verdicts, violations = validate(
-        pending, suite, n_salts=n_salts, violation_sample_ppm=violation_sample_ppm
-    )
+    verdicts, violations = validate(pending, suite, violation_sample_ppm=violation_sample_ppm)
     # persisted so the parquet sink below materializes the cache and the
     # ledger-entry aggregation reuses it — the commit point derives from the
     # verdicts ALREADY IN HAND, never from re-reading the accumulated output

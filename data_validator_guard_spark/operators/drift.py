@@ -49,6 +49,29 @@ def histogram(
     )
 
 
+def psi_chi2(pdf: pd.DataFrame, n_buckets: int) -> tuple[float, float]:
+    """PSI and chi-square of one group's per-bucket counts (``bucket``,
+    ``n_cur``, ``n_base`` rows). The sums run over the full fixed bucket range
+    in bucket order, so absent buckets contribute their smoothed epsilon mass
+    deterministically; chi-square is 0 when either side is empty."""
+    tot_c = float(pdf["n_cur"].sum())
+    tot_b = float(pdf["n_base"].sum())
+    by_bucket = pdf.groupby("bucket")[["n_cur", "n_base"]].sum()
+    psi = 0.0
+    chi2 = 0.0
+    for b in range(-1, n_buckets):
+        nc = float(by_bucket["n_cur"].get(b, 0.0))
+        nb = float(by_bucket["n_base"].get(b, 0.0))
+        p = nc / tot_c + EPS if tot_c > 0 else EPS
+        q = nb / tot_b + EPS if tot_b > 0 else EPS
+        psi += (p - q) * math.log(p / q)
+        if tot_b > 0 and tot_c > 0:
+            e = nb * tot_c / tot_b
+            if e > 0:
+                chi2 += (nc - e) ** 2 / e
+    return psi, chi2
+
+
 def psi_report(
     current: DataFrame,
     baseline: DataFrame,
@@ -73,30 +96,14 @@ def psi_report(
 
     def _stat(pdf: pd.DataFrame) -> pd.DataFrame:
         grp = pdf["grp"].iloc[0]
-        tot_c = float(pdf["n_cur"].sum())
-        tot_b = float(pdf["n_base"].sum())
-        psi = 0.0
-        chi2 = 0.0
-        # iterate the full fixed bucket range so absent buckets contribute
-        # their smoothed epsilon mass deterministically.
-        by_bucket = pdf.set_index("bucket")
-        for b in range(-1, n_buckets):
-            nc = float(by_bucket["n_cur"].get(b, 0.0))
-            nb = float(by_bucket["n_base"].get(b, 0.0))
-            p = nc / tot_c + EPS if tot_c > 0 else EPS
-            q = nb / tot_b + EPS if tot_b > 0 else EPS
-            psi += (p - q) * math.log(p / q)
-            if tot_b > 0 and tot_c > 0:
-                e = nb * tot_c / tot_b
-                if e > 0:
-                    chi2 += (nc - e) ** 2 / e
+        psi, chi2 = psi_chi2(pdf, n_buckets)
         return pd.DataFrame(
             {
                 "grp": [grp],
                 "psi": [psi],
                 "chi2": [chi2],
-                "n_cur": [int(tot_c)],
-                "n_base": [int(tot_b)],
+                "n_cur": [int(pdf["n_cur"].sum())],
+                "n_base": [int(pdf["n_base"].sum())],
             }
         )
 
@@ -230,16 +237,7 @@ def drift_violations(
     def _stat(pdf: pd.DataFrame) -> pd.DataFrame:
         partv = pdf["partition"].iloc[0]
         grp = pdf["grp"].iloc[0]
-        tot_c = float(pdf["n_cur"].sum())
-        tot_b = float(pdf["n_base"].sum())
-        psi = 0.0
-        by_bucket = pdf.groupby("bucket")[["n_cur", "n_base"]].sum()
-        for b in range(-1, n_buckets):
-            nc = float(by_bucket["n_cur"].get(b, 0.0))
-            nb = float(by_bucket["n_base"].get(b, 0.0))
-            p_ = nc / tot_c + EPS if tot_c > 0 else EPS
-            q_ = nb / tot_b + EPS if tot_b > 0 else EPS
-            psi += (p_ - q_) * math.log(p_ / q_)
+        psi, _chi2 = psi_chi2(pdf, n_buckets)
         return pd.DataFrame({"partition": [partv], "grp": [grp], "psi": [psi]})
 
     per_group = joined.groupBy("partition", "__grpk").applyInPandas(

@@ -1,12 +1,10 @@
-"""Salted two-phase duplicate detection (north rule; SURVEY.md §4.3).
+"""Exact key counts and duplicate detection (north rule; SURVEY.md §4.3).
 
 The reference's ``df.duplicated(subset, keep=False)``
-(`/root/reference/validation/general_validation.py:19-27`) as a
-skew-resistant distributed plan: phase 1 partially counts on
-(key, salt) so a hot key's rows spread over ``n_salts`` reducers; phase 2
-merges the tiny partial counts per key. Result is exact for any salt
-assignment; ``spark_partition_id()`` is used as the salt so no extra hash is
-computed and rows never move before phase 1's map-side combine.
+(`validation/general_validation.py:19-27`) as one hash aggregation. A hot
+key needs no salt: Spark's map-side partial ``count`` combines each key
+within its task, so a key hot on 30% of the rows sends one partial row per
+task into the exchange, not 30% of the rows.
 """
 
 from __future__ import annotations
@@ -15,25 +13,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def key_counts(df: DataFrame, cols: list[str | Column], n_salts: int = 64) -> DataFrame:
-    """Exact count per key tuple via the salted two-phase aggregation.
-    Output: ``*cols, n``."""
-    names = [c if isinstance(c, str) else None for c in cols]
-    sel = [
-        (F.col(c).alias(c) if isinstance(c, str) else c.alias(f"__k{i}"))
-        for i, c in enumerate(cols)
-    ]
-    outnames = [n if n is not None else f"__k{i}" for i, n in enumerate(names)]
-    salted = df.select(*sel).withColumn(
-        "__salt", F.pmod(F.spark_partition_id(), F.lit(n_salts))
-    )
-    phase1 = salted.groupBy(*outnames, "__salt").agg(F.count(F.lit(1)).alias("__c"))
-    return phase1.groupBy(*outnames).agg(F.sum("__c").alias("n"))
+def key_counts(df: DataFrame, cols: list[str | Column]) -> DataFrame:
+    """Exact count per key tuple: ``*cols, n``. Column keys are named
+    ``__k<i>`` by their position."""
+    keys = [c if isinstance(c, str) else c.alias(f"__k{i}") for i, c in enumerate(cols)]
+    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
 
 
-def duplicate_keys(df: DataFrame, cols: list[str | Column], n_salts: int = 64) -> DataFrame:
+def duplicate_keys(df: DataFrame, cols: list[str | Column]) -> DataFrame:
     """Key tuples occurring more than once: ``*cols, n`` with n > 1."""
-    return key_counts(df, cols, n_salts).filter(F.col("n") > 1)
+    return key_counts(df, cols).filter(F.col("n") > 1)
 
 
 def salted_equijoin(

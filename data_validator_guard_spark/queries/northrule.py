@@ -182,7 +182,7 @@ def q_verdicts_code(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-rule flagship contract, oracle-gated end to end: per-
     (rule, repo-hash-bucket) verdicts over the (repo, path, commit, lang,
     content) shape — regex conformance on path/commit, traversal ban,
-    uniqueness on the (repo, path, commit) identity (salted two-phase at
+    uniqueness on the (repo, path, commit) identity (hashed key count at
     scale), inline-dim referential on lang, null-rate and exact-cardinality
     column stats. Same engine path bench.py's validate_synth measures at
     8M rows; here every counter is replayed in DuckDB."""

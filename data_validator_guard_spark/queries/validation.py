@@ -122,7 +122,7 @@ def q_violations_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# 3. Uniqueness via salted two-phase aggregation (A1; north rule).
+# 3. Uniqueness via one hash aggregation (A1; north rule).
 # =====================================================================
 @query(
     "duplicate_event_keys",

@@ -6,7 +6,7 @@ The reference drives validation from hard-coded check methods
 (`cleaning/general_id_cleaning.py:90-149`). This engine replaces both with one
 declarative spec: a :class:`Rule` names *what* to check; the compiler in
 :mod:`data_validator_guard_spark.engine` decides *how* (fused column
-expressions, broadcast anti-joins, salted two-phase aggregation).
+expressions, broadcast anti-joins, hash aggregations).
 
 Rule types and their reference ancestors (SURVEY.md §2.12):
 
@@ -33,7 +33,9 @@ range_tolerance     |``params["value"]`` - ``params["expected"]``| <=
 derived_equality    ``params["value"]`` == ``params["expected"]`` (rule 14:
                     code derived from source metadata vs stored column,
                     movisensxs_validation.py:55-78)
-unique              no duplicate ``columns`` tuples — salted two-phase agg
+unique              no duplicate ``columns`` tuples — one hash aggregation
+                    on the key hash (``params["mode"]="hash"``, default) or
+                    on the full key (``"shuffle"``)
                     (general_validation.py:19-27, A1; north rule)
 unique_normalized   unique over upper(trim(col)) (A2)
 foreign_key         ``columns`` tuples must exist in ``params["dim"]``
@@ -47,8 +49,13 @@ join_consistency    rows joined against ``params["other"]`` on
                     optionally violate via ``params["require_match"]``
 null_rate_max       table-level: fraction of blanks <= ``params["max_rate"]``
 min_rows            table-level: partition must contain >= ``params["n"]`` rows
-cardinality_range   table-level: approx distinct count of column within
-                    [lo, hi] (A6 at scale → approx_count_distinct)
+cardinality_range   table-level: distinct count of column within [lo, hi]
+                    (A6). Approximate by default: per-grain HLL sketches
+                    (``hll_sketch_agg``, default lgConfigK) merged by
+                    ``hll_union_agg``; ``params["exact"]=True`` counts the
+                    distinct (partition, value) pairs in their own
+                    aggregation instead, at any cardinality. NULLs are not
+                    counted either way
 drift               distribution drift vs a baseline histogram (PSI /
                     chi-square), the engine's one pandas UDF (§2.10)
 ==================  =========================================================
@@ -159,6 +166,13 @@ class Rule:
             raise ValueError(
                 f"rule {self.rule_id!r} ({self.type}) requires at least one column"
             )
+        if self.type in ("unique", "unique_normalized"):
+            mode = self.params.get("mode", "hash")
+            if mode not in ("hash", "shuffle"):
+                raise ValueError(
+                    f"rule {self.rule_id!r} ({self.type}) params['mode'] must be "
+                    f"'hash' or 'shuffle', got {mode!r}"
+                )
 
 
 @dataclass(frozen=True)

@@ -46,7 +46,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--rule-version", default="v1")
     p.add_argument("--partitions", type=int, default=16, help="repo-hash verdict buckets")
     p.add_argument("--baseline-hist", default=None, help="optional parquet (grp,bucket,n) for drift")
-    p.add_argument("--n-salts", type=int, default=64)
     p.add_argument(
         "--violation-sample-ppm",
         type=int,
@@ -98,7 +97,6 @@ def main(argv: list[str] | None = None) -> int:
         args.out,
         snapshot_id=args.snapshot_id,
         rule_version=args.rule_version,
-        n_salts=args.n_salts,
         violation_sample_ppm=args.violation_sample_ppm,
     )
     stats["wall_sec"] = round(time.time() - t0, 2)

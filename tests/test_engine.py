@@ -217,10 +217,9 @@ def test_validate_many_and_empty_table_semantics(spark):
 
 
 def test_fused_drift_totals_matches_fallback(spark):
-    """The (partition, group, bucket) fused totals path must be invisible:
-    identical verdicts whether drift shares the totals scan (approx
-    cardinality -> HLL) or runs the direct path (exact cardinality forces
-    the fallback)."""
+    """The (partition, group, bucket) totals grain must be invisible:
+    identical verdicts whether cardinality merges HLL sketches across the
+    drift grain or counts exact distinct values per partition."""
     from pyspark.sql import functions as F
 
     from data_validator_guard_spark.engine import validate
@@ -258,12 +257,56 @@ def test_fused_drift_totals_matches_fallback(spark):
             key_cols=("id",),
         )
 
-    v_fused, _ = validate(df, mk_suite(exact=False))     # fused path
-    v_direct, _ = validate(df, mk_suite(exact=True))     # fallback path
+    v_fused, _ = validate(df, mk_suite(exact=False))     # HLL sketches
+    v_direct, _ = validate(df, mk_suite(exact=True))     # exact distinct count
     fused = {(r.rule_id): (r["pass"], r.n_rows, r.n_violations) for r in v_fused.collect()}
     direct = {(r.rule_id): (r["pass"], r.n_rows, r.n_violations) for r in v_direct.collect()}
     assert fused == direct
     assert fused["v_not_blank"] == (False, 300, 30)
+
+
+def test_exact_cardinality_at_high_cardinality(spark):
+    """Exact cardinality counts the distinct non-NULL values of each
+    partition — here thousands per partition, with and without a drift rule
+    widening the totals grain — and passes exactly up to ``hi``."""
+    from pyspark.sql import functions as F
+
+    from data_validator_guard_spark.engine import validate
+    from data_validator_guard_spark.operators.drift import histogram
+    from data_validator_guard_spark.rules import Rule, RuleSuite
+
+    df = spark.range(6000).select(
+        (F.col("id") % 2).cast("string").alias("p"),
+        F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") % 4001).alias("v"),
+        F.col("id").cast("string").alias("content"),
+    )
+    truth = {r.p: r.c for r in df.groupBy("p").agg(F.count_distinct("v").alias("c")).collect()}
+    assert min(truth.values()) > 1000
+    edges = [0.0, 2.0, 4.0]
+    drift = Rule(
+        "len_drift",
+        "drift",
+        ("content",),
+        {
+            "group_by": "p",
+            "value": "length(content)",
+            "edges": edges,
+            "baseline": histogram(df, "p", F.length("content"), edges),
+            "threshold": 10.0,
+        },
+    )
+    for extra in ([], [drift]):
+        his = sorted({n for n in truth.values()} | {n - 1 for n in truth.values()})
+        rules = [
+            Rule(f"card_le_{hi}", "cardinality_range", ("v",), {"lo": 1, "hi": hi, "exact": True})
+            for hi in his
+        ]
+        suite = RuleSuite("card", rules + extra, partition_by="p", key_cols=("content",))
+        verdicts, _ = validate(df, suite)
+        got = {(r.rule_id, r.partition): r["pass"] for r in verdicts.collect()}
+        for hi in his:
+            for p, n in truth.items():
+                assert got[(f"card_le_{hi}", p)] == (n <= hi)
 
 
 def test_inline_fk_null_dim_rows_still_counts_violations(spark):
@@ -463,6 +506,8 @@ def test_rule_param_validation_fails_at_definition_time(spark):
         Rule("r", "unique", ())
     with _pytest.raises(ValueError, match="missing required params"):
         Rule("r", "join_consistency", ("a",), {"other": None})
+    with _pytest.raises(ValueError, match="'hash' or 'shuffle', got 'hsah'"):
+        Rule("r", "unique", ("a",), {"mode": "hsah"})
     # min_max legitimately allows one-sided bounds
     Rule("ok", "min_max", ("a",), {"lo": 0})
 

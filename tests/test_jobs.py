@@ -168,7 +168,6 @@ def test_spark_submit_py_files_validate(spark, tmp_path):
             "--out", out,
             "--snapshot-id", "snap-test",
             "--partitions", "4",
-            "--n-salts", "4",
         ],
         cwd=str(tmp_path),
         capture_output=True,
@@ -217,7 +216,6 @@ def test_validate_job_pins_snapstore_input(spark, tmp_path):
             "--out", out,
             "--snapshot-id", "1",
             "--partitions", "4",
-            "--n-salts", "4",
         ]
     )
     assert rc == 0

@@ -184,18 +184,29 @@ def test_drift_rule_in_suite(spark):
 
 
 def test_salted_uniqueness_matches_plain_groupby_under_skew(spark):
-    """Skew test (SURVEY.md §5.2): hot key = 30% of rows; salted two-phase
-    result must equal a plain groupBy."""
+    """Skew test (SURVEY.md §5.2): hot key = 30% of rows. duplicate_keys and
+    the engine's unique rule in both modes (hash and shuffle) must equal a
+    plain groupBy."""
+    from data_validator_guard_spark.engine import validate
     from data_validator_guard_spark.operators.uniqueness import duplicate_keys
+    from data_validator_guard_spark.rules import Rule, RuleSuite
 
     rows = [("hot", i % 7) for i in range(300)] + [(f"k{i}", i) for i in range(700)]
     df = spark.createDataFrame(rows, "k string, v int").repartition(8)
-    salted = {(r.k, r.v): r.n for r in duplicate_keys(df, ["k", "v"]).collect()}
+    got = {(r.k, r.v): r.n for r in duplicate_keys(df, ["k", "v"]).collect()}
     plain = {
         (r.k, r.v): r.n
         for r in df.groupBy("k", "v").agg(F.count(F.lit(1)).alias("n")).filter("n>1").collect()
     }
-    assert salted == plain and len(salted) > 0
+    assert got == plain and len(got) > 0
+    expected = {f"{k}|{v}": n for (k, v), n in plain.items()}
+    for mode in ("hash", "shuffle"):
+        suite = RuleSuite("skew", [Rule("kv", "unique", ("k", "v"), {"mode": mode})])
+        verdicts, violations = validate(df, suite, persist_violations=False)
+        found = {r["keys"]: r.detail for r in violations.collect()}
+        assert found == {k: f"duplicate key x{n}" for k, n in expected.items()}, mode
+        (v,) = verdicts.collect()
+        assert v.n_violations == sum(expected.values()) and v["pass"] is False, mode
 
 
 def test_language_id_and_quality(spark):
