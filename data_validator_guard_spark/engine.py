@@ -42,8 +42,10 @@ Operator choices:
 - **group_consistency**: exact distinct-count per group — an explicit,
   order-independent tightening of the reference's order-dependent
   ``x == x.iloc[0]`` (`maganamed_validation.py:231-232`; SURVEY.md §7 hard 4).
-- **drift**: the engine's one pandas UDF (Arrow-batched, grouped) — see
-  :mod:`data_validator_guard_spark.operators.drift`.
+- **drift**: the engine's one pandas UDF — ONE Arrow-batched
+  ``applyInPandas`` call over the fine histogram (the totals' grain)
+  unioned with the baseline, scoring every (partition, group) pair at
+  once; see :mod:`data_validator_guard_spark.operators.drift`.
 """
 
 from __future__ import annotations

@@ -5,24 +5,38 @@ rule adds it: per-group histograms of a numeric measure compared to a baseline
 snapshot with PSI and chi-square computed in an Arrow-batched grouped pandas
 UDF (`applyInPandas`), never per-row Python.
 
+Each statistic is ONE pandas call for every group at once: the current and
+baseline histograms are unioned, tagged by side, and handed whole to one
+``groupBy(lit(0)).applyInPandas``, which builds ``[groups x buckets]`` count
+matrices and scores them with one vectorized kernel (:func:`psi_chi2`). The
+call's input is the two histograms, never rows, so a per-group call's fixed
+Python cost is paid once per statistic, not once per group ("Accelerating
+Python UDFs in Vectorized Query Execution", CIDR 2022).
+
 Determinism contract (SURVEY.md §7 hard point 2): bucket edges are fixed
 constants supplied by the caller — never derived from the data — and the
 smoothing epsilon is a fixed constant, so results are reproducible and
-oracle-checkable.
+oracle-checkable. The kernel adds bucket terms in bucket order and takes logs
+and squares with Python's scalar ``math.log`` and ``**``, so a group's result
+is bit-identical to a scalar loop over its buckets, however the groups are
+batched.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Sequence
+from typing import Callable, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.group import GroupedData
 
 from data_validator_guard_spark.rules import Rule
 
 EPS = 1e-6  # fixed smoothing constant on proportions
+SIDE_CUR, SIDE_BASE = 0, 1  # the ``side`` tag of a histogram row in the union
 
 
 def bucketize(value: Column, edges: Sequence[float]) -> Column:
@@ -49,27 +63,101 @@ def histogram(
     )
 
 
-def psi_chi2(pdf: pd.DataFrame, n_buckets: int) -> tuple[float, float]:
-    """PSI and chi-square of one group's per-bucket counts (``bucket``,
-    ``n_cur``, ``n_base`` rows). The sums run over the full fixed bucket range
-    in bucket order, so absent buckets contribute their smoothed epsilon mass
-    deterministically; chi-square is 0 when either side is empty."""
-    tot_c = float(pdf["n_cur"].sum())
-    tot_b = float(pdf["n_base"].sum())
-    by_bucket = pdf.groupby("bucket")[["n_cur", "n_base"]].sum()
-    psi = 0.0
-    chi2 = 0.0
-    for b in range(-1, n_buckets):
-        nc = float(by_bucket["n_cur"].get(b, 0.0))
-        nb = float(by_bucket["n_base"].get(b, 0.0))
-        p = nc / tot_c + EPS if tot_c > 0 else EPS
-        q = nb / tot_b + EPS if tot_b > 0 else EPS
-        psi += (p - q) * math.log(p / q)
-        if tot_b > 0 and tot_c > 0:
-            e = nb * tot_c / tot_b
-            if e > 0:
-                chi2 += (nc - e) ** 2 / e
+def _scalar(f: Callable[[float], float], a: np.ndarray) -> np.ndarray:
+    """``f`` applied to each element as a Python float. numpy's vectorized
+    ``log`` and square differ from libm's scalar ``log`` and ``pow`` in the
+    last bit on some inputs; this keeps the scalar results."""
+    return np.array([f(v) for v in a.ravel().tolist()], dtype=np.float64).reshape(a.shape)
+
+
+def psi_chi2(
+    n_cur: np.ndarray, n_base: np.ndarray, tot_cur: np.ndarray, tot_base: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """PSI and chi-square of every group at once.
+
+    ``n_cur``/``n_base`` are int64 ``[groups x buckets]`` count matrices over
+    the full fixed bucket range (column j is bucket j-1), ``tot_cur``/
+    ``tot_base`` the int64 per-group totals. Absent buckets contribute their
+    smoothed epsilon mass deterministically; a side whose total is 0 has
+    every proportion at epsilon; chi-square is 0 when either side is empty.
+    Bucket terms are added in bucket order, so each group's result is
+    bit-identical to a scalar loop over its buckets."""
+    tc = tot_cur.astype(np.float64)[:, None]
+    tb = tot_base.astype(np.float64)[:, None]
+    nc = n_cur.astype(np.float64)
+    nb = n_base.astype(np.float64)
+    p = np.divide(nc, tc, out=np.zeros_like(nc), where=tc > 0) + EPS
+    q = np.divide(nb, tb, out=np.zeros_like(nb), where=tb > 0) + EPS
+    psi_terms = (p - q) * _scalar(math.log, p / q)
+    e = np.divide(nb * tc, tb, out=np.zeros_like(nb), where=(tb > 0) & (tc > 0))
+    chi2_terms = np.divide(
+        _scalar(lambda d: d**2, nc - e), e, out=np.zeros_like(e), where=e > 0
+    )
+    psi = np.zeros(len(nc))
+    chi2 = np.zeros(len(nc))
+    for j in range(nc.shape[1]):  # bucket order; np.sum would add pairwise
+        psi += psi_terms[:, j]
+        chi2 += chi2_terms[:, j]
     return psi, chi2
+
+
+def _keys(*cols: pd.Series) -> np.ndarray:
+    """An object array of key tuples, for ``pd.factorize``. Tuples, not bare
+    strings: pandas hashes an all-string object array as C strings, which
+    merges ``''`` with ``'\\x00x'``; a NULL key stays its own key."""
+    return np.fromiter(zip(*cols), dtype=object, count=len(cols[0]))
+
+
+def _counts(
+    codes: np.ndarray, rows: pd.DataFrame, n_groups: int, n_buckets: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Sum ``rows`` (``bucket``, ``n``) by group code into an int64
+    ``[groups x buckets]`` matrix over buckets -1..n_buckets-1 (others are
+    dropped), and into int64 per-group totals over every row."""
+    n = rows["n"].to_numpy(np.int64)
+    tot = np.zeros(n_groups, np.int64)
+    np.add.at(tot, codes, n)
+    ok = rows["bucket"].between(-1, n_buckets - 1).to_numpy()
+    m = np.zeros((n_groups, n_buckets + 1), np.int64)
+    np.add.at(m, (codes[ok], rows["bucket"].to_numpy()[ok].astype(np.int64) + 1), n[ok])
+    return m, tot
+
+
+def _one_group(current: DataFrame, baseline: DataFrame, *keys: str) -> GroupedData:
+    """Both histograms unioned, tagged by ``side``, as ONE group:
+    ``side int, *keys string, grp string, bucket bigint, n bigint``. The
+    baseline rows carry NULL ``keys``; a NULL count reads as 0."""
+
+    def tag(h: DataFrame, side: int, key_cols: list[Column]) -> DataFrame:
+        return h.select(
+            F.lit(side).alias("side"),
+            *key_cols,
+            F.col("grp").cast("string").alias("grp"),
+            F.col("bucket").cast("bigint").alias("bucket"),
+            F.coalesce(F.col("n").cast("bigint"), F.lit(0)).alias("n"),
+        )
+
+    cur = tag(current, SIDE_CUR, [F.col(k).cast("string").alias(k) for k in keys])
+    base = tag(baseline, SIDE_BASE, [F.lit(None).cast("string").alias(k) for k in keys])
+    return cur.unionByName(base).groupBy(F.lit(0).alias("__all"))
+
+
+def _psi_report_frame(pdf: pd.DataFrame, n_buckets: int) -> pd.DataFrame:
+    """PSI and chi-square of every grp of either side."""
+    cur = (pdf["side"] == SIDE_CUR).to_numpy()
+    codes, grps = pd.factorize(_keys(pdf["grp"]))
+    n_cur, tot_cur = _counts(codes[cur], pdf[cur], len(grps), n_buckets)
+    n_base, tot_base = _counts(codes[~cur], pdf[~cur], len(grps), n_buckets)
+    psi, chi2 = psi_chi2(n_cur, n_base, tot_cur, tot_base)
+    return pd.DataFrame(
+        {
+            "grp": [k[0] for k in grps],
+            "psi": psi,
+            "chi2": chi2,
+            "n_cur": tot_cur,
+            "n_base": tot_base,
+        }
+    )
 
 
 def psi_report(
@@ -79,36 +167,18 @@ def psi_report(
 ) -> DataFrame:
     """PSI + chi-square per group from two histograms (grp, bucket, n).
 
-    Output: ``grp string, psi double, chi2 double, n_cur bigint, n_base bigint``.
-    The heavy work (the histograms) stays JVM-side; only the tiny per-group
-    bucket vectors cross into pandas via Arrow.
+    Output: ``grp string, psi double, chi2 double, n_cur bigint, n_base bigint``
+    — one row per grp of either side (a side without the grp counts 0).
+    ``n_cur``/``n_base`` total every row of the grp; the statistics read
+    buckets -1..len(edges)-1 only. Repeated (grp, bucket) rows are summed.
+    The heavy work (the histograms) stays JVM-side; the one pandas call
+    receives both histograms whole — groups x buckets rows plus the
+    baseline's — never data rows.
     """
-    joined = (
-        current.select("grp", "bucket", F.col("n").alias("n_cur"))
-        .join(
-            baseline.select("grp", "bucket", F.col("n").alias("n_base")),
-            ["grp", "bucket"],
-            "full_outer",
-        )
-        .fillna(0, subset=["n_cur", "n_base"])
-    )
     n_buckets = len(edges)
-
-    def _stat(pdf: pd.DataFrame) -> pd.DataFrame:
-        grp = pdf["grp"].iloc[0]
-        psi, chi2 = psi_chi2(pdf, n_buckets)
-        return pd.DataFrame(
-            {
-                "grp": [grp],
-                "psi": [psi],
-                "chi2": [chi2],
-                "n_cur": [int(pdf["n_cur"].sum())],
-                "n_base": [int(pdf["n_base"].sum())],
-            }
-        )
-
-    return joined.groupBy("grp").applyInPandas(
-        _stat, "grp string, psi double, chi2 double, n_cur bigint, n_base bigint"
+    return _one_group(current, baseline).applyInPandas(
+        lambda pdf: _psi_report_frame(pdf, n_buckets),
+        "grp string, psi double, chi2 double, n_cur bigint, n_base bigint",
     )
 
 
@@ -167,6 +237,23 @@ def ks_report(current: DataFrame, baseline: DataFrame) -> DataFrame:
     )
 
 
+def _drift_frame(pdf: pd.DataFrame, n_buckets: int) -> pd.DataFrame:
+    """PSI of every (partition, grp) pair of the current side against its
+    grp's baseline; the totals are the in-range bucket counts."""
+    cur = (pdf["side"] == SIDE_CUR).to_numpy()
+    grp_codes, grps = pd.factorize(_keys(pdf["grp"]))
+    pair_codes, pairs = pd.factorize(_keys(pdf["partition"][cur], pdf["grp"][cur]))
+    pair_grp = np.zeros(len(pairs), np.int64)
+    pair_grp[pair_codes] = grp_codes[cur]
+    n_cur, _ = _counts(pair_codes, pdf[cur], len(pairs), n_buckets)
+    n_base, _ = _counts(grp_codes[~cur], pdf[~cur], len(grps), n_buckets)
+    n_base = n_base[pair_grp]
+    psi, _chi2 = psi_chi2(n_cur, n_base, n_cur.sum(axis=1), n_base.sum(axis=1))
+    return pd.DataFrame(
+        {"partition": [k[0] for k in pairs], "grp": [k[1] for k in pairs], "psi": psi}
+    )
+
+
 def drift_violations(
     df: DataFrame, rule: Rule, part: Column, cur: DataFrame | None = None
 ) -> DataFrame:
@@ -178,6 +265,18 @@ def drift_violations(
     ``(partition, grp, bucket, n)`` — the engine passes the fine-grained
     totals aggregation here so the drift check adds NO extra scan of the
     value column.
+
+    Every (partition, grp) pair present in ``cur`` is scored against the
+    FULL baseline histogram of its grp (the baseline is constant across
+    partitions; a NULL grp matches a NULL grp; baseline buckets outside
+    -1..len(edges)-1 are ignored). Pairs present only in the baseline (a
+    group with zero current rows in a partition) are out of scope: verdicts
+    certify current data; disappearance is a min_rows / cardinality_range
+    rule's job.
+
+    One pandas call scores every pair: its input is ``cur`` unioned with the
+    baseline, at most partitions x groups x (len(edges)+1) rows plus the
+    baseline's rows, whatever the number of data rows.
 
     Returns a weighted violations fragment
     ``(rule_id, partition, keys, detail, weight)`` — one row per drifted
@@ -195,55 +294,11 @@ def drift_violations(
             part.alias("partition"), F.col(group_col).alias("grp"), bucketize(value, edges).alias("bucket")
         ).agg(F.count(F.lit(1)).alias("n"))
     n_buckets = len(edges)
-    # baseline is (grp, bucket, n) — constant across partitions, so every
-    # (partition, grp) pair seen in the CURRENT data must compare against the
-    # FULL baseline histogram of its grp. A naive full-outer join on
-    # (grp, bucket) detaches baseline-only buckets from the partition (they
-    # have no cur row to take it from), silently shrinking tot_b — a
-    # distribution that SHIFTED AWAY from its baseline buckets would
-    # under-count PSI and could pass (caught by
-    # test_incremental_drift_parity_with_full_run). Build the complete
-    # (partition, grp) x bucket grid instead — all three factors are tiny
-    # (the fine histogram's key space and a literal bucket range), so the
-    # grid and both joins stay broadcast-scale. Pairs present only in the
-    # baseline (a group with zero current rows in a partition) are out of
-    # scope: verdicts certify current data; disappearance is a min_rows /
-    # cardinality_range rule's job.
-    spark = cur.sparkSession
-    buckets = spark.createDataFrame(
-        [(i,) for i in range(-1, n_buckets)], "bucket int"
+    scores = _one_group(cur, baseline, "partition").applyInPandas(
+        lambda pdf: _drift_frame(pdf, n_buckets),
+        "partition string, grp string, psi double",
     )
-    # join key: NULL grps are legal groupBy keys but vanish from equi-joins
-    # (NULL != NULL) — derive a null-safe string key, keep the original grp
-    # for the emitted violation row.
-    grpk = F.coalesce(F.col("grp").cast("string"), F.lit("\x00__null_grp__"))
-    curk = cur.select(
-        "partition", grpk.alias("__grpk"), "bucket", F.col("n").alias("n_cur")
-    )
-    basek = baseline.select(
-        grpk.alias("__grpk"), "bucket", F.col("n").cast("bigint").alias("n_base")
-    )
-    grid = (
-        cur.select("partition", "grp", grpk.alias("__grpk"))
-        .distinct()
-        .crossJoin(F.broadcast(buckets))
-    )
-    joined = (
-        grid.join(curk, ["partition", "__grpk", "bucket"], "left")
-        .join(basek, ["__grpk", "bucket"], "left")
-        .fillna(0, subset=["n_cur", "n_base"])
-    )
-
-    def _stat(pdf: pd.DataFrame) -> pd.DataFrame:
-        partv = pdf["partition"].iloc[0]
-        grp = pdf["grp"].iloc[0]
-        psi, _chi2 = psi_chi2(pdf, n_buckets)
-        return pd.DataFrame({"partition": [partv], "grp": [grp], "psi": [psi]})
-
-    per_group = joined.groupBy("partition", "__grpk").applyInPandas(
-        _stat, "partition string, grp string, psi double"
-    )
-    drifted = per_group.filter(F.col("psi") > F.lit(threshold))
+    drifted = scores.filter(F.col("psi") > F.lit(threshold))
     return drifted.select(
         F.lit(rule.rule_id).alias("rule_id"),
         F.col("partition"),

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_validator_guard_spark.functions import is_blank
+from data_validator_guard_spark.operators.dedup import _track_persist
 
 
 def column_stats(
@@ -734,7 +735,14 @@ def bloom_probe(
     full d-way collision. The filter side is sketch-sized; the join is an
     inner join on ``pos`` followed by a count-distinct-positions comparison
     per key (a key's d hashes may collide with each other, so the bar is
-    its DISTINCT position count, not d)."""
+    its DISTINCT position count, not d).
+
+    The probe ignores ``partition``: it reads the union of every
+    partition's set bits, so a key stored in ANY partition of ``bloom``
+    probes True. For a per-partition answer, filter ``bloom`` to that
+    partition first. The false-positive rate is therefore that of one
+    filter holding all n distinct keys of every partition together,
+    about ``(1 - exp(-d * n / m)) ** d`` — not the per-partition rate."""
     if m <= 0:
         raise ValueError(f"m must be positive, got {m}")
     if d <= 0:
@@ -885,7 +893,9 @@ def robust_outlier_values(
     the verdict join); the deviation histogram is DERIVED from it by
     arithmetic, not a rescan; every window runs over histogram rows
     (|group| x |distinct values|), and the median/MAD frames are
-    group-sized broadcast joins. NULL values are excluded (no rank).
+    group-sized broadcast joins. The persisted histogram stays cached until
+    :func:`~data_validator_guard_spark.operators.dedup.unpersist_intermediates`
+    releases it. NULL values are excluded (no rank).
     MAD = 0 (over half the group identical) flags ANY deviating value —
     the correct degenerate reading of a zero robust spread.
     """
@@ -900,8 +910,9 @@ def robust_outlier_values(
         .agg(F.count(F.lit(1)).alias("__n"))
     )
     # reused by the median pass, the deviation histogram, and the verdict
-    # join — without the persist each reference re-runs the data scan
-    hist = hist.persist()
+    # join — without the persist each reference re-runs the data scan;
+    # tracked, so dedup.unpersist_intermediates() releases it
+    hist = _track_persist(hist)
 
     def _t1_median(h: DataFrame, key: str, alias: str) -> DataFrame:
         w = (

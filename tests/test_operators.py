@@ -183,6 +183,192 @@ def test_drift_rule_in_suite(spark):
     assert violations.collect()[0].keys == "b"
 
 
+def _loop_psi_chi2(pdf, n_buckets):
+    """The scalar per-group loop the vectorized kernel replaced: one group's
+    ``bucket, n_cur, n_base`` rows, buckets -1..n_buckets-1 in order."""
+    import math
+
+    from data_validator_guard_spark.operators.drift import EPS
+
+    tot_c = float(pdf["n_cur"].sum())
+    tot_b = float(pdf["n_base"].sum())
+    by_bucket = pdf.groupby("bucket")[["n_cur", "n_base"]].sum()
+    psi = 0.0
+    chi2 = 0.0
+    for b in range(-1, n_buckets):
+        nc = float(by_bucket["n_cur"].get(b, 0.0))
+        nb = float(by_bucket["n_base"].get(b, 0.0))
+        p = nc / tot_c + EPS if tot_c > 0 else EPS
+        q = nb / tot_b + EPS if tot_b > 0 else EPS
+        psi += (p - q) * math.log(p / q)
+        if tot_b > 0 and tot_c > 0:
+            e = nb * tot_c / tot_b
+            if e > 0:
+                chi2 += (nc - e) ** 2 / e
+    return psi, chi2
+
+
+def _loop_rows(cur, base):
+    """``bucket, n_cur, n_base`` rows of one group from its (bucket, n) pairs."""
+    import pandas as pd
+
+    rows = [(b, n, 0) for b, n in cur] + [(b, 0, n) for b, n in base]
+    return pd.DataFrame(rows, columns=["bucket", "n_cur", "n_base"]).astype(
+        {"n_cur": "int64", "n_base": "int64"}
+    )
+
+
+# current (partition, grp, bucket, n) and baseline (grp, bucket, n): grps
+# None, '' and '\x00x' are three groups; 'new' has no baseline; 'gone' has no
+# current rows; 'a' has baseline buckets outside -1..len(edges)-1 (and a NULL
+# bucket), which the statistics ignore.
+_DRIFT_EDGES = [0.0, 10.0, 20.0, 40.0]
+_DRIFT_CUR = [
+    ("p1", None, 0, 5), ("p1", None, 2, 1),
+    ("p1", "", 1, 4), ("p1", "", 3, 2),
+    ("p1", "\x00x", -1, 3), ("p1", "\x00x", 0, 3),
+    ("p1", "a", 0, 7), ("p1", "a", 1, 2), ("p1", "a", 2, 9),
+    ("p2", "a", 3, 6), ("p2", "a", -1, 1),
+    ("p2", "new", 1, 8),
+    (None, "", 2, 2),
+]
+_DRIFT_BASE = [
+    (None, 0, 4), (None, 1, 4),
+    ("", 1, 5), ("", 2, 1),
+    ("\x00x", 0, 6), ("\x00x", 3, 2),
+    ("a", 0, 5), ("a", 1, 3), ("a", 2, 7), ("a", 3, 1), ("a", -5, 40), ("a", 99, 11), ("a", None, 9),
+    ("gone", 1, 3), ("gone", 2, 3),
+]
+
+
+def _in_range(rows, n_buckets):
+    return [(b, n) for b, n in rows if b is not None and -1 <= b < n_buckets]
+
+
+def test_psi_kernel_bit_identical_to_scalar_loop():
+    """The vectorized kernel equals the per-group loop bit for bit on random
+    count matrices (numpy's own log or square would differ in the last bit
+    on some groups), including empty sides and empty buckets."""
+    import numpy as np
+
+    from data_validator_guard_spark.operators.drift import psi_chi2
+
+    rng = np.random.default_rng(7)
+    n_buckets = 9
+    shape = (2000, n_buckets + 1)  # ~1 in 1000 terms tells a numpy square from pow
+    n_cur = rng.integers(0, 1000, shape) * (rng.random(shape) < 0.7)
+    n_base = rng.integers(0, 1000, shape) * (rng.random(shape) < 0.7)
+    n_cur[:5] = 0   # groups with no current rows
+    n_base[5:10] = 0  # groups with no baseline
+    psi, chi2 = psi_chi2(n_cur, n_base, n_cur.sum(axis=1), n_base.sum(axis=1))
+    for g in range(len(n_cur)):
+        rows = _loop_rows(
+            list(zip(range(-1, n_buckets), n_cur[g].tolist())),
+            list(zip(range(-1, n_buckets), n_base[g].tolist())),
+        )
+        want = _loop_psi_chi2(rows, n_buckets)
+        assert (psi[g].hex(), chi2[g].hex()) == (want[0].hex(), want[1].hex()), g
+
+
+def test_psi_report_bit_identical_to_scalar_loop(spark):
+    """psi_report scores the union of both sides' grps — a grp with no
+    baseline, one with zero current rows, NULL / '' / '\\x00x' as three
+    groups — bit-identical to the per-group loop; n_cur/n_base total every
+    row, out-of-range buckets included."""
+    from data_validator_guard_spark.operators.drift import psi_report
+
+    n_buckets = len(_DRIFT_EDGES)
+    cur = spark.createDataFrame([r[1:] for r in _DRIFT_CUR], "grp string, bucket int, n bigint")
+    base = spark.createDataFrame(_DRIFT_BASE, "grp string, bucket int, n bigint")
+    got = {
+        r.grp: (r.psi.hex(), r.chi2.hex(), r.n_cur, r.n_base)
+        for r in psi_report(cur, base, _DRIFT_EDGES).collect()
+    }
+    want = {}
+    for g in {r[1] for r in _DRIFT_CUR} | {r[0] for r in _DRIFT_BASE}:
+        c = [(b, n) for _p, gg, b, n in _DRIFT_CUR if gg == g]
+        bb = [(b, n) for gg, b, n in _DRIFT_BASE if gg == g]
+        psi, chi2 = _loop_psi_chi2(_loop_rows(c, bb), n_buckets)
+        want[g] = (psi.hex(), chi2.hex(), sum(n for _b, n in c), sum(n for _b, n in bb))
+    assert len(want) == 6 and got == want
+
+
+def test_drift_scores_bit_identical_to_scalar_loop(spark):
+    """drift_violations' one pandas call scores exactly the (partition, grp)
+    pairs of the current histogram, each against its grp's whole in-range
+    baseline (NULL grp matches NULL grp; no baseline reads as empty),
+    bit-identical to the per-group loop; the Spark path emits the same pairs."""
+    import pandas as pd
+
+    from data_validator_guard_spark.operators.drift import (
+        SIDE_BASE,
+        SIDE_CUR,
+        _drift_frame,
+        drift_violations,
+    )
+    from data_validator_guard_spark.rules import Rule
+
+    n_buckets = len(_DRIFT_EDGES)
+    pdf = pd.DataFrame(
+        [(SIDE_CUR, *r) for r in _DRIFT_CUR] + [(SIDE_BASE, None, *r) for r in _DRIFT_BASE],
+        columns=["side", "partition", "grp", "bucket", "n"],
+    )
+    got = {
+        (r.partition, r.grp): r.psi.hex()
+        for r in _drift_frame(pdf, n_buckets).itertuples(index=False)
+    }
+    want = {}
+    for p, g in {(r[0], r[1]) for r in _DRIFT_CUR}:
+        c = _in_range([(b, n) for pp, gg, b, n in _DRIFT_CUR if (pp, gg) == (p, g)], n_buckets)
+        bb = _in_range([(b, n) for gg, b, n in _DRIFT_BASE if gg == g], n_buckets)
+        want[(p, g)] = _loop_psi_chi2(_loop_rows(c, bb), n_buckets)[0].hex()
+    assert len(want) == 7 and got == want
+
+    cur = spark.createDataFrame(_DRIFT_CUR, "partition string, grp string, bucket int, n bigint")
+    base = spark.createDataFrame(_DRIFT_BASE, "grp string, bucket int, n bigint")
+    rule = Rule(
+        "dr", "drift", ("v",),
+        {"group_by": "g", "value": "v", "edges": _DRIFT_EDGES, "baseline": base, "threshold": -1.0},
+    )
+    out = drift_violations(cur, rule, F.col("partition"), cur=cur).collect()
+    assert sorted(((r.partition, r.keys) for r in out), key=repr) == sorted(want, key=repr)
+    for r in out:
+        psi = float.fromhex(want[(r.partition, r.keys)])
+        assert abs(float(r.detail.split("=")[1].split(" ")[0]) - psi) <= 5.1e-7
+
+
+def test_drift_repeated_baseline_rows_sum_on_baseline_side(spark):
+    """A baseline with repeated (grp, bucket) rows reads as their sum: the
+    current counts are not multiplied by the repeats (psi_report and
+    drift_violations both)."""
+    from data_validator_guard_spark.operators.drift import drift_violations, psi_report
+    from data_validator_guard_spark.rules import Rule
+
+    edges = [0.0, 10.0]
+    cur = spark.createDataFrame(
+        [("p", "a", 0, 4), ("p", "a", 1, 6)], "partition string, grp string, bucket int, n bigint"
+    )
+    repeated = spark.createDataFrame(
+        [("a", 0, 3), ("a", 0, 2), ("a", 1, 1)], "grp string, bucket int, n bigint"
+    )
+    summed = spark.createDataFrame([("a", 0, 5), ("a", 1, 1)], "grp string, bucket int, n bigint")
+
+    def report(base):
+        return [tuple(r) for r in psi_report(cur.drop("partition"), base, edges).collect()]
+
+    assert report(repeated) == report(summed)
+    assert report(repeated)[0][3:] == (10, 6)
+
+    def violations(base):
+        rule = Rule(
+            "dr", "drift", ("v",),
+            {"group_by": "g", "value": "v", "edges": edges, "baseline": base, "threshold": 0.0},
+        )
+        return [tuple(r) for r in drift_violations(cur, rule, F.col("partition"), cur=cur).collect()]
+
+    assert violations(repeated) == violations(summed) != []
+
+
 def test_salted_uniqueness_matches_plain_groupby_under_skew(spark):
     """Skew test (SURVEY.md §5.2): hot key = 30% of rows. duplicate_keys and
     the engine's unique rule in both modes (hash and shuffle) must equal a
@@ -2646,6 +2832,26 @@ def test_robust_outlier_values_exact_and_degenerate(spark):
 
     with pytest.raises(ValueError):
         robust_outlier_values(df, "g", F.col("v"), k_num=0)
+
+
+def test_robust_outlier_values_cache_is_released(spark):
+    """The histogram robust_outlier_values persists is tracked: one
+    unpersist_intermediates() call releases it, so the context no longer
+    holds its RDD."""
+    from data_validator_guard_spark.operators import dedup
+    from data_validator_guard_spark.operators.stats import robust_outlier_values
+
+    def persistent() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    df = spark.createDataFrame([("g", v) for v in [1, 2, 3, 50]], "g string, v bigint")
+    dedup.unpersist_intermediates()  # clean slate
+    before = persistent()
+    robust_outlier_values(df, "g", F.col("v")).collect()
+    held = persistent() - before
+    assert held, "the histogram should be cached while in use"
+    assert dedup.unpersist_intermediates() == 1
+    assert not held & persistent()
 
 
 def test_domain_screen_suffix_exact_and_traps(spark):

@@ -154,6 +154,33 @@ def test_fused_drift_adds_no_extra_scan(spark, docs):
     assert len(schemas) <= 2, f"expected <=2 scans, got {len(schemas)}: {schemas}"
 
 
+def test_drift_is_one_pandas_call_without_a_grid(spark, docs):
+    """A drift suite's verdicts run the PSI as ONE grouped pandas call over
+    the unioned histograms: one FlatMapGroupsInPandas, and no
+    (partition, grp) x bucket grid — no cross join of any kind."""
+    from data_validator_guard_spark.engine import validate
+    from data_validator_guard_spark.operators.drift import histogram
+    from data_validator_guard_spark.rules import Rule, RuleSuite
+
+    edges = [0.0, 100.0, 300.0]
+    rule = Rule(
+        "dr",
+        "drift",
+        ("text",),
+        {
+            "group_by": "lang",
+            "value": "length(text)",
+            "edges": edges,
+            "baseline": histogram(docs, "lang", F.length("text"), edges),
+            "threshold": 0.2,
+        },
+    )
+    verdicts, _ = validate(docs, RuleSuite("p", [rule], partition_by="source"))
+    s = plans.plan_string(verdicts, "simple")
+    assert s.count("FlatMapGroupsInPandas") == 1, s
+    assert "CartesianProduct" not in s and "BroadcastNestedLoopJoin" not in s, s
+
+
 def test_topk_compiles_to_take_ordered_not_global_window(spark):
     """Top-k paths must be distributed TakeOrderedAndProject — a k-row merge
     of per-partition top-ks — never a partition-less Window that funnels
