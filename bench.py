@@ -22,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from data_validator_guard_spark.session import get_session  # noqa: E402
+from data_validator_guard_spark.session import get_session, unpersist_intermediates  # noqa: E402
 
 SYNTH_ROWS = int(os.environ.get("DVG_BENCH_SYNTH_ROWS", "8000000"))
 
@@ -127,6 +127,9 @@ def main() -> None:
     # number (both legs are recorded for honesty).
     legs = []
     for _ in range(2):
+        # each leg must run uncached, not from the previous run's cached
+        # fragment union and drift histogram
+        unpersist_intermediates()
         t0 = time.perf_counter()
         verdicts, violations = validate(src, suite)
         _force(verdicts)
@@ -174,14 +177,15 @@ def main() -> None:
             F.col("path")
         ),
     )
-    # each validate() call above persisted its fragment union + drift
+    # each validate() call above cached its fragment union + drift
     # histogram; drop them so this leg measures the plan, not cache pressure
-    spark.catalog.clearCache()
+    unpersist_intermediates()
     warm_hv_v, warm_hv_x = validate(hv_src.limit(50000), suite)
     _force(warm_hv_v)
     _force(warm_hv_x)
     hv_legs = []
     for _ in range(2):
+        unpersist_intermediates()
         t0 = time.perf_counter()
         hv_verdicts, hv_violations = validate(hv_src, suite)
         _force(hv_verdicts)

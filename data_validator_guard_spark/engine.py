@@ -31,7 +31,14 @@ Execution strategy (the part the reference could not have — SURVEY.md §4):
    (weight = offending-row count per emitted key); verdicts join per-(rule,
    partition) weight sums against the totals. Fragment outputs are small
    (aggregations / anti-joins — never row-level violation rows), so the
-   union is persisted by default and shared between the two outputs.
+   union is cached and shared between the two outputs.
+
+Caching: ``validate`` caches the fine histogram (only when a drift rule
+reads it) and the fragment union (only when there are fragments) through
+:func:`~data_validator_guard_spark.session.track_persist`. The outputs are
+lazy, so the caller releases both with
+:func:`~data_validator_guard_spark.session.unpersist_intermediates` after
+its last sink (``ledger.run_with_ledger`` does).
 
 Operator choices:
 - **unique**: one hash aggregation counting (partition, key hash), then an
@@ -54,7 +61,6 @@ from typing import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from data_validator_guard_spark.functions import is_blank, normalized
 from data_validator_guard_spark.operators.uniqueness import duplicate_keys
@@ -64,6 +70,7 @@ from data_validator_guard_spark.rules import (
     Rule,
     RuleSuite,
 )
+from data_validator_guard_spark.session import track_persist
 
 VERDICT_COLS = ("rule_id", "partition", "pass", "n_rows", "n_violations")
 VIOLATION_COLS = ("rule_id", "partition", "keys", "detail")
@@ -423,7 +430,6 @@ def _group_consistency_violations(df: DataFrame, rule: Rule, part: Column) -> Da
 def validate(
     df: DataFrame,
     suite: RuleSuite,
-    persist_violations: bool = True,
     violation_sample_ppm: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Run every rule in ``suite`` over ``df``.
@@ -445,13 +451,16 @@ def validate(
 
     Both are lazy. Verdicts for row- and table-level rules come entirely from
     the single fused totals aggregation — materializing only verdicts never
-    touches the violation-row scan. ``persist_violations=True`` (default)
-    caches the plan-level fragment union (small: aggregation / anti-join /
-    drift outputs — row-level violation rows are NOT in it) so sinking both
-    outputs shares the unique/drift subplans instead of recomputing them;
-    measured ~1.4x faster on the flagship suite at 8M rows. Pass False for
-    verdict-only runs that should leave no cached state, and ``unpersist()``
-    the cached frame in long-lived sessions.
+    touches the violation-row scan.
+
+    Cached: the plan-level fragment union (small: aggregation / anti-join /
+    drift outputs — row-level violation rows are NOT in it), so sinking both
+    outputs shares the unique/drift subplans instead of recomputing them
+    (measured ~1.4x faster on the flagship suite at 8M rows); and, with a
+    drift rule, the fine histogram that feeds both the totals and the drift
+    fragment. Both go through ``session.track_persist``: call
+    ``session.unpersist_intermediates()`` after the last sink to release
+    them.
     """
     spark = df.sparkSession
     # null-safe partition value: verdict/violation counts join on partition,
@@ -556,11 +565,9 @@ def validate(
         )
         final_aggs.append(F.sum(f"__fv_{r.rule_id}").cast("bigint").alias(f"__v_{r.rule_id}"))
     fine = df.groupBy(*grain).agg(*fine_aggs)
-    if drift_rules and persist_violations:
-        # the fine histogram feeds BOTH totals and the drift fragment; persist
-        # it only when the caller wants shared/cached state (same contract as
-        # the fragment union below) — verdict-only runs leave no cached RDDs.
-        fine = fine.persist(StorageLevel.MEMORY_AND_DISK)
+    if drift_rules:
+        # the fine histogram feeds BOTH totals and the drift fragment
+        fine = track_persist(fine)
     per_partition = fine
     for card in exact_cards:
         per_partition = per_partition.join(card, "partition", "left")
@@ -622,8 +629,8 @@ def validate(
         [], "rule_id string, partition string, keys string, detail string, weight bigint"
     )
     plan_weighted = _union_all(fragments, empty_w)
-    if persist_violations and fragments:
-        plan_weighted = plan_weighted.persist(StorageLevel.MEMORY_AND_DISK)
+    if fragments:
+        plan_weighted = track_persist(plan_weighted)
     weighted = (
         row_fragment.select(*empty_w.columns).unionByName(plan_weighted)
         if row_fragment is not None

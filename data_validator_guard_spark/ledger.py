@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from data_validator_guard_spark.engine import validate
 from data_validator_guard_spark.rules import RuleSuite
+from data_validator_guard_spark.session import track_persist, unpersist_intermediates
 
 LEDGER_SCHEMA = (
     "partition string, snapshot_id string, rule_version string, "
@@ -83,6 +84,15 @@ def run_with_ledger(
     under ``stats/`` too — table-level stats over ANY set of completed
     snapshots/partitions then come from ``merge_column_stats`` over the
     stored partials, no rescan. Returns counters for observability.
+
+    Dynamic overwrite is set on each partitioned write, never on the
+    session, so the caller's ``partitionOverwriteMode`` is left unchanged.
+    The verdicts frame is cached for the sinks and the ledger entries; in a
+    ``finally``, one ``session.unpersist_intermediates()`` call releases it
+    together with ``validate``'s cached frames, so a long-lived session
+    running one batch after another holds no cache between batches, even
+    when a sink raises. The release is process-global (the ``session``
+    module docstring).
     """
     spark = df.sparkSession
     ledger_path = os.path.join(out_dir, "ledger")
@@ -97,69 +107,67 @@ def run_with_ledger(
     # docstring); ledger rows_failed comes from verdict counters, so resume
     # accounting stays exact under sampling.
     verdicts, violations = validate(pending, suite, violation_sample_ppm=violation_sample_ppm)
-    # persisted so the parquet sink below materializes the cache and the
+    # cached so the parquet sink below materializes the cache and the
     # ledger-entry aggregation reuses it — the commit point derives from the
     # verdicts ALREADY IN HAND, never from re-reading the accumulated output
     # directory (which grows with history; round-2 verdict "what's wrong" #4).
-    verdicts = verdicts.persist()
+    verdicts = track_persist(verdicts)
+    try:
+        _overwrite_partitions(verdicts, verdicts_path)
+        _overwrite_partitions(violations, violations_path)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # rename to a writable partition column; violations/verdicts keep
-    # "partition" in their schema contract, parquet dirs use pt=<value>.
-    (
-        verdicts.withColumn("pt", F.col("partition"))
-        .write.mode("overwrite")
-        .partitionBy("pt")
-        .parquet(verdicts_path)
-    )
-    (
-        violations.withColumn("pt", F.col("partition"))
-        .write.mode("overwrite")
-        .partitionBy("pt")
-        .parquet(violations_path)
-    )
+        if stats_columns:
+            from data_validator_guard_spark.operators.stats import partial_column_stats
 
-    if stats_columns:
-        from data_validator_guard_spark.operators.stats import partial_column_stats
+            partials = partial_column_stats(pending, stats_columns, suite.partition_by)
+            _overwrite_partitions(partials, os.path.join(out_dir, "stats"))
 
-        partials = partial_column_stats(pending, stats_columns, suite.partition_by)
-        (
-            partials.withColumn("pt", F.col("partition"))
-            .write.mode("overwrite")
-            .partitionBy("pt")
-            .parquet(os.path.join(out_dir, "stats"))
+        # commit point: ledger entries from THIS run's verdicts frame (pending
+        # partitions only by construction — no re-read of history, no isin
+        # filter against the done list needed). rows_failed sums n_violations
+        # across rules, i.e. it is a VIOLATION count (a row violating 3 rules
+        # counts 3 times), matching the reference's per-rule counters — it is
+        # not a distinct-failed-row count.
+        entries = (
+            verdicts.groupBy("partition")
+            .agg(
+                F.max("n_rows").alias("rows_scanned"),
+                F.sum("n_violations").alias("rows_failed"),
+            )
+            .select(
+                "partition",
+                F.lit(snapshot_id).alias("snapshot_id"),
+                F.lit(rule_version).alias("rule_version"),
+                "rows_scanned",
+                "rows_failed",
+                F.lit("done").alias("status"),
+                F.lit(time.time()).alias("ts"),
+            )
         )
-
-    # commit point: ledger entries from THIS run's verdicts frame (pending
-    # partitions only by construction — no re-read of history, no isin
-    # filter against the done list needed). rows_failed sums n_violations
-    # across rules, i.e. it is a VIOLATION count (a row violating 3 rules
-    # counts 3 times), matching the reference's per-rule counters — it is
-    # not a distinct-failed-row count.
-    entries = (
-        verdicts.groupBy("partition")
-        .agg(
-            F.max("n_rows").alias("rows_scanned"),
-            F.sum("n_violations").alias("rows_failed"),
-        )
-        .select(
-            "partition",
-            F.lit(snapshot_id).alias("snapshot_id"),
-            F.lit(rule_version).alias("rule_version"),
-            "rows_scanned",
-            "rows_failed",
-            F.lit("done").alias("status"),
-            F.lit(time.time()).alias("ts"),
-        )
-    )
-    entries.write.mode("append").parquet(ledger_path)
-
-    n_new = entries.count()
-    verdicts.unpersist()
+        entries.write.mode("append").parquet(ledger_path)
+        n_new = entries.count()
+    finally:
+        # this batch's verdicts and validate()'s cached frames, even when a
+        # sink raises
+        unpersist_intermediates()
     return {
         "partitions_done_before": len(done),
         "partitions_validated": n_new,
     }
+
+
+def _overwrite_partitions(df: DataFrame, path: str) -> None:
+    """Write ``df`` as parquet partitioned by ``pt`` (a copy of its
+    ``partition`` column, which stays in the schema contract), replacing
+    only the partitions ``df`` holds. Dynamic overwrite is a per-write
+    option, so the session conf stays as the caller set it."""
+    (
+        df.withColumn("pt", F.col("partition"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("pt")
+        .parquet(path)
+    )
 
 
 def load_results(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame]:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from data_validator_guard_spark.operators.dedup import shingle_table
 from data_validator_guard_spark.operators.text import normalize_text
+from data_validator_guard_spark.session import track_persist
 
 
 def exact_contamination(
@@ -109,21 +110,20 @@ def fuzzy_contamination(
         DEFAULT_MAX_BUCKET,
         _band_table,
         _cap_buckets,
-        _track_persist,
         jaccard_verify,
         minhash_signature,
     )
 
     if max_bucket is None:
         max_bucket = DEFAULT_MAX_BUCKET
-    t_sig = _track_persist(minhash_signature(train, text_col, id_col, k, n))
-    e_sig = _track_persist(minhash_signature(eval_df, text_col, id_col, k, n))
+    t_sig = track_persist(minhash_signature(train, text_col, id_col, k, n))
+    e_sig = track_persist(minhash_signature(eval_df, text_col, id_col, k, n))
     banded = (
         _band_table(e_sig, k, bands)
         .withColumn("is_eval", F.lit(True))
         .unionByName(_band_table(t_sig, k, bands).withColumn("is_eval", F.lit(False)))
     )
-    banded = _track_persist(_cap_buckets(banded, ["band", "val"], max_bucket))
+    banded = track_persist(_cap_buckets(banded, ["band", "val"], max_bucket))
     e = banded.filter(F.col("is_eval")).alias("e")
     t = banded.filter(~F.col("is_eval")).alias("t")
     pairs = (
@@ -134,7 +134,7 @@ def fuzzy_contamination(
         .select(F.col("e.id").alias("id1"), F.col("t.id").alias("id2"))
         .distinct()
     )
-    pairs = _track_persist(pairs)
+    pairs = track_persist(pairs)
     cand_ids = (
         pairs.select(F.col("id1").alias("id"))
         .unionByName(pairs.select(F.col("id2").alias("id")))
@@ -145,7 +145,7 @@ def fuzzy_contamination(
     # reference re-explodes BOTH corpora into n-grams (the minhash_near_
     # duplicates persist rationale — verified by plan audit: 248 static
     # scans without this persist, 10 with).
-    shingles = _track_persist(
+    shingles = track_persist(
         shingle_table(eval_df, text_col, id_col, n)
         .unionByName(shingle_table(train, text_col, id_col, n))
         .join(cand_ids, "id", "left_semi")

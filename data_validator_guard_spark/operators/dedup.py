@@ -15,10 +15,12 @@ Scale design:
   expression-level.
 
 Caching: the near-dup operators persist reused intermediates (signatures,
-shingles, capped frames) because each feeds several subplans. The returned
+shingles, capped frames) because each feeds several subplans, through
+:func:`~data_validator_guard_spark.session.track_persist`. The returned
 DataFrames are lazy, so the operators cannot unpersist for you — after the
-terminal action, call ``unpersist_intermediates()`` (long-lived sessions) or
-let the executors' LRU evict (batch jobs that end with the session).
+terminal action, call
+:func:`~data_validator_guard_spark.session.unpersist_intermediates`
+(the cache contract is in the ``session`` module docstring).
 
 Determinism (oracle parity): every hash is md5 of an explicit string —
 identical hex in any engine; minhash = lexicographic MIN over md5 hex strings;
@@ -29,9 +31,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from data_validator_guard_spark.operators.text import normalize_text
+from data_validator_guard_spark.session import track_persist
 
 # Default per-bucket row cap for every LSH/blocking join below. A bucket of
 # size s contributes O(s²) candidate pairs; one degenerate bucket (e.g. every
@@ -41,47 +43,6 @@ from data_validator_guard_spark.operators.text import normalize_text
 # that is ≤ 5·10⁷ comparisons per degenerate bucket — bounded work instead of
 # a runaway stage.
 DEFAULT_MAX_BUCKET = 10_000
-
-# Intermediates persisted by the near-dup operators, so long-lived sessions
-# can release them after the terminal action (round-2 advice: persists
-# accumulated across repeated operator calls with no cleanup hook).
-# NOTE the disk tier: MEMORY_AND_DISK blocks evicted from memory land on
-# executor DISK and are NOT LRU-evicted — a long batch job that never calls
-# unpersist_intermediates() accumulates spilled blocks until the session
-# ends. High-level entry points with a terminal action (jobs/curate.py)
-# call it; anything driving these operators in a loop must too. The registry
-# is process-global, shared across threads/sessions — guarded by a lock.
-import threading as _threading
-
-_PERSISTED: list[DataFrame] = []
-_PERSISTED_LOCK = _threading.Lock()
-
-
-def _track_persist(df: DataFrame) -> DataFrame:
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    with _PERSISTED_LOCK:
-        _PERSISTED.append(out)
-    return out
-
-
-def unpersist_intermediates() -> int:
-    """Unpersist every intermediate frame the dedup operators cached since
-    the last call; returns how many were released. Safe to call anytime —
-    results already computed are unaffected (recomputation only happens if a
-    returned frame is re-executed afterwards). Thread-safe: concurrent
-    callers each release a disjoint subset."""
-    n = 0
-    while True:
-        with _PERSISTED_LOCK:
-            if not _PERSISTED:
-                break
-            df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
 
 
 def _cap_buckets(
@@ -253,9 +214,9 @@ def minhash_near_duplicates(
     # (verified: 7 parquet scans in the executed plan). Both frames are small
     # relative to the corpus (k hashes / distinct shingles per doc);
     # MEMORY_AND_DISK spills rather than OOMs at scale.
-    sig = _track_persist(minhash_signature(df, text_col, id_col, k, n))
+    sig = track_persist(minhash_signature(df, text_col, id_col, k, n))
     pairs = lsh_candidate_pairs(sig, k, bands, max_bucket)
-    shingles = _track_persist(shingle_table(df, text_col, id_col, n))
+    shingles = track_persist(shingle_table(df, text_col, id_col, n))
     return jaccard_verify(pairs, shingles, threshold)
 
 
@@ -307,14 +268,14 @@ def incremental_near_duplicates(
     (validation_flow.py); incremental mining is this engine's scale
     extension of its duplicate checks (general_validation.py:19-27).
     """
-    new_sig = _track_persist(minhash_signature(new_df, text_col, id_col, k, n))
-    new_sh = _track_persist(shingle_table(new_df, text_col, id_col, n))
+    new_sig = track_persist(minhash_signature(new_df, text_col, id_col, k, n))
+    new_sh = track_persist(shingle_table(new_df, text_col, id_col, n))
     banded = (
         _band_table(new_sig, k, bands)
         .withColumn("is_new", F.lit(True))
         .unionByName(_band_table(corpus_sig, k, bands).withColumn("is_new", F.lit(False)))
     )
-    banded = _track_persist(_cap_buckets(banded, ["band", "val"], max_bucket))
+    banded = track_persist(_cap_buckets(banded, ["band", "val"], max_bucket))
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (
@@ -328,7 +289,7 @@ def incremental_near_duplicates(
         .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
         .distinct()
     )
-    pairs = _track_persist(pairs)
+    pairs = track_persist(pairs)
     # Verify only needs shingles of candidate ids: semi-join the store down
     # BEFORE the intersection join, so verify never shuffles the whole
     # corpus shingle store per batch (store bucketed by id makes this a
@@ -363,7 +324,7 @@ def ngram_jaccard_duplicates(
         F.floor(F.length(F.col(text_col)) / length_bucket).alias("__lb"),
         word_shingles(F.col(text_col), n).alias("__sh"),
     )
-    base = _track_persist(_cap_buckets(base, [*block_cols, "__lb"], max_bucket))
+    base = track_persist(_cap_buckets(base, [*block_cols, "__lb"], max_bucket))
     a = base.alias("a")
     b = base.alias("b")
     cond = (F.col("a.id") < F.col("b.id")) & (F.col("a.__lb") == F.col("b.__lb"))
@@ -464,7 +425,7 @@ def simhash_near_duplicates(
     verification over the full signature. Oversized band buckets are dropped
     by the count pre-pass (recall-only loss).
     """
-    sig = _track_persist(simhash64(df, text_col, id_col))
+    sig = track_persist(simhash64(df, text_col, id_col))
     width = SIMHASH64_BITS // bands
     band_structs = [
         F.struct(
@@ -630,7 +591,7 @@ def embedding_near_duplicates(
         _int_lsh_bits(F.col("__q"), n_planes).alias("__bucket"),
         checked_norm2(F.col("__q"), "embedding_near_duplicates").alias("__n2"),
     )
-    keyed = _track_persist(_cap_buckets(keyed, ["__bucket"], max_bucket))
+    keyed = track_persist(_cap_buckets(keyed, ["__bucket"], max_bucket))
     a, b = keyed.alias("a"), keyed.alias("b")
     pairs = a.join(
         b,
@@ -989,7 +950,7 @@ def code_clone_pairs(
     consumers of the corpus's one expensive scan); release it with
     ``unpersist_intermediates()`` like the other near-dup operators.
     """
-    fp = _track_persist(
+    fp = track_persist(
         winnow_fingerprints(df, text_col, id_col, k=k, w=w).select(
             F.col(id_col).alias("__doc"), "fingerprint"
         )

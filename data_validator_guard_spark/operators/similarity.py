@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_validator_guard_spark.session import track_persist
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -301,16 +303,16 @@ def _assign_to_centroids(qframe: DataFrame, cents: DataFrame) -> DataFrame:
 def _quantized_frame(
     corpus: DataFrame, vec_col: str, id_col: str, scale: int
 ) -> DataFrame:
-    """Quantize the corpus ONCE and persist it (dedup's tracked registry, so
-    ``unpersist_intermediates`` releases it): seed selection, every Lloyd
-    iteration and the final assignment all read this frame instead of
-    re-scanning the source — at 100 TB the quantized projection is the only
-    thing the k-means build should touch more than once."""
-    from data_validator_guard_spark.operators.dedup import _quantize, _track_persist
+    """Quantize the corpus ONCE and persist it (the session's tracked
+    registry, so ``unpersist_intermediates`` releases it): seed selection,
+    every Lloyd iteration and the final assignment all read this frame
+    instead of re-scanning the source — at 100 TB the quantized projection
+    is the only thing the k-means build should touch more than once."""
+    from data_validator_guard_spark.operators.dedup import _quantize
 
     cols = [F.col(id_col).alias("id")]
     cols.append(_quantize(F.col(vec_col), scale).alias("__qv"))
-    return _track_persist(corpus.select(*cols))
+    return track_persist(corpus.select(*cols))
 
 
 def ivf_centroids(

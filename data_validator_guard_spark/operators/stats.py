@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_validator_guard_spark.functions import is_blank
-from data_validator_guard_spark.operators.dedup import _track_persist
+from data_validator_guard_spark.session import track_persist
 
 
 def column_stats(
@@ -894,7 +894,7 @@ def robust_outlier_values(
     arithmetic, not a rescan; every window runs over histogram rows
     (|group| x |distinct values|), and the median/MAD frames are
     group-sized broadcast joins. The persisted histogram stays cached until
-    :func:`~data_validator_guard_spark.operators.dedup.unpersist_intermediates`
+    :func:`~data_validator_guard_spark.session.unpersist_intermediates`
     releases it. NULL values are excluded (no rank).
     MAD = 0 (over half the group identical) flags ANY deviating value —
     the correct degenerate reading of a zero robust spread.
@@ -911,8 +911,8 @@ def robust_outlier_values(
     )
     # reused by the median pass, the deviation histogram, and the verdict
     # join — without the persist each reference re-runs the data scan;
-    # tracked, so dedup.unpersist_intermediates() releases it
-    hist = _track_persist(hist)
+    # tracked, so session.unpersist_intermediates() releases it
+    hist = track_persist(hist)
 
     def _t1_median(h: DataFrame, key: str, alias: str) -> DataFrame:
         w = (

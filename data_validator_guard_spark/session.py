@@ -1,17 +1,33 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with scale-appropriate defaults, and the package's one
+owner of cached frames.
 
 The reference runs eager single-threaded pandas (no session concept). Here the
 session is configured for the plans this engine emits: AQE on (runtime shuffle
 coalescing + skew-join splitting), Arrow on (the drift statistic is the one
 pandas UDF), and a shuffle-partition count suited to the local[] harness while
 remaining a plain config knob for a real cluster.
+
+Caching: this is the only module that persists or releases a frame. Every
+frame the package reuses across subplans (``engine.validate``'s fine
+histogram and fragment union, the ledger's verdicts, the near-dup, stats and
+similarity operators' intermediates, ``jobs/curate.py``'s labeled docs) is
+cached with :func:`track_persist` at ``MEMORY_AND_DISK``. DataFrames are
+lazy, so the code that caches a frame cannot know when its caller is done
+with it: after the terminal action (the last sink), the caller calls
+:func:`unpersist_intermediates`. ``ledger.run_with_ledger`` and
+``jobs/curate.py`` do this in a ``finally``; anything else that drives
+``validate`` or the operators in a loop must too, because
+``MEMORY_AND_DISK`` blocks evicted from memory land on executor disk and are
+not LRU-evicted — they accumulate until the session ends.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 DEFAULT_CONFS: dict[str, str] = {
     # AQE: coalesce small shuffle partitions, split skewed ones at runtime.
@@ -59,3 +75,39 @@ def get_session(
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# Frames cached by track_persist since the last unpersist_intermediates().
+# Process-global, shared across threads and sessions — guarded by a lock.
+_PERSISTED: list[DataFrame] = []
+_PERSISTED_LOCK = threading.Lock()
+
+
+def track_persist(df: DataFrame) -> DataFrame:
+    """Cache ``df`` at ``MEMORY_AND_DISK`` and register it, so the next
+    :func:`unpersist_intermediates` call releases it."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    with _PERSISTED_LOCK:
+        _PERSISTED.append(out)
+    return out
+
+
+def unpersist_intermediates() -> int:
+    """Unpersist every frame :func:`track_persist` cached since the last
+    call; returns how many were released. Safe to call anytime — results
+    already computed are unaffected, and a frame another caller still uses
+    only costs that caller a recompute if it is re-executed afterwards,
+    never a wrong result. Thread-safe: concurrent callers each release a
+    disjoint subset."""
+    n = 0
+    while True:
+        with _PERSISTED_LOCK:
+            if not _PERSISTED:
+                break
+            df = _PERSISTED.pop()
+        try:
+            df.unpersist()
+            n += 1
+        except Exception:
+            pass
+    return n

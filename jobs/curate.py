@@ -50,13 +50,13 @@ def curate(
     **thresholds,
 ) -> dict:
     from pyspark.sql import functions as F
-    from pyspark.storagelevel import StorageLevel
 
     from data_validator_guard_spark.operators.quality import curation_disposition
     from data_validator_guard_spark.operators.text import chunk_documents
+    from data_validator_guard_spark.session import track_persist, unpersist_intermediates
 
     disp = curation_disposition(docs, text_col, id_col, **thresholds)
-    labeled = docs.join(disp, id_col).persist(StorageLevel.MEMORY_AND_DISK)
+    labeled = track_persist(docs.join(disp, id_col))
     try:
         by = {
             r["disposition"]: r["n"]
@@ -80,15 +80,10 @@ def curate(
         chunks.write.mode("overwrite").parquet(os.path.join(out_dir, "train_chunks"))
         n_chunks = spark.read.parquet(os.path.join(out_dir, "train_chunks")).count()
     finally:
-        labeled.unpersist()
-        # curation_disposition's dedup stage tracks persisted intermediates
+        # labeled and curation_disposition's dedup intermediates
         # (signatures/shingles); everything is written out above, so release
-        # them here — the terminal-action contract from the dedup module
+        # them here — the terminal-action contract from the session module
         # docstring (MEMORY_AND_DISK spill blocks are not LRU-evicted).
-        from data_validator_guard_spark.operators.dedup import (
-            unpersist_intermediates,
-        )
-
         unpersist_intermediates()
 
     return {

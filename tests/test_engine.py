@@ -544,7 +544,7 @@ def test_depends_on_gated_execution(spark):
         partition_by="part",
         key_cols=("id",),
     )
-    verdicts, violations = validate(df, suite, persist_violations=False)
+    verdicts, violations = validate(df, suite)
     v = {(r.rule_id, r.partition): r for r in verdicts.collect()}
     assert v[("gate", "p1")]["pass"] is False
     assert v[("b_not_null", "p1")]["pass"] is None
@@ -707,3 +707,49 @@ def test_group_consistency_count_nulls_semantics(spark):
     assert nv == {"gc_default": 1, "gc_nulls": 2}
     flagged = {(r.rule_id, r.keys) for r in violations.collect()}
     assert flagged == {("gc_default", "g2"), ("gc_nulls", "g1"), ("gc_nulls", "g2")}
+
+
+def test_validate_caches_are_released(spark):
+    """validate() caches the fine histogram (a drift rule reads it) and the
+    fragment union; after the verdicts are collected and the violations
+    sunk, one unpersist_intermediates() call releases both, so the context
+    holds none of the RDDs the run added."""
+    from pyspark.sql import functions as F
+
+    from data_validator_guard_spark.operators.drift import histogram
+    from data_validator_guard_spark.session import unpersist_intermediates
+
+    def persistent() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    rows = [(i, "g" + str(i % 3), "x" * (10 + (i * 7) % 50)) for i in range(300)]
+    df = spark.createDataFrame(rows, "id long, grp string, content string")
+    edges = [0.0, 20.0, 40.0, 60.0]
+    suite = RuleSuite(
+        "cached",
+        [
+            Rule("id_unique", "unique", ("id",)),
+            Rule(
+                "len_drift",
+                "drift",
+                ("content",),
+                {
+                    "group_by": "grp",
+                    "value": "length(content)",
+                    "edges": edges,
+                    "baseline": histogram(df, "grp", F.length("content"), edges),
+                    "threshold": 0.1,
+                },
+            ),
+        ],
+        key_cols=("id",),
+    )
+    unpersist_intermediates()  # clean slate
+    before = persistent()
+    verdicts, violations = validate(df, suite)
+    verdicts.collect()
+    violations.write.format("noop").mode("overwrite").save()
+    added = persistent() - before
+    assert len(added) >= 2, "the fine histogram and the fragment union are cached"
+    assert unpersist_intermediates() >= 2
+    assert not added & persistent()

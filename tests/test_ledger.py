@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from data_validator_guard_spark.ledger import load_results, run_with_ledger
 from data_validator_guard_spark.rules import Rule, RuleSuite
+from data_validator_guard_spark.session import unpersist_intermediates
 
 
 @pytest.fixture()
@@ -26,6 +27,10 @@ def suite():
 def _mkdf(spark):
     rows = [(f"p{i % 4}", None if i % 11 == 0 else i % 37) for i in range(200)]
     return spark.createDataFrame(rows, "grp string, v int")
+
+
+def _persistent(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_resume_only_recomputes_unfinished(spark, suite, tmp_path):
@@ -138,3 +143,48 @@ def test_ledger_writes_mergeable_stats(spark, tmp_path):
     }
     assert merged == direct
     assert merged["lang"]["n_rows"] == df.count()
+
+
+def test_session_overwrite_mode_is_left_unchanged(spark, suite, tmp_path):
+    """Dynamic overwrite is a per-write option: run_with_ledger leaves the
+    session's partitionOverwriteMode as the caller set it, and a resumed
+    run still replaces only the partitions it writes."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        before = spark.conf.get(key)
+        df = _mkdf(spark)
+        out = str(tmp_path / "run")
+        partial = df.filter(F.col("grp").isin(["p0", "p1"]))
+        run_with_ledger(partial, suite, out, snapshot_id="s1", rule_version="r1")
+        run_with_ledger(df, suite, out, snapshot_id="s1", rule_version="r1")
+        assert spark.conf.get(key) == before
+        got_v, _ = load_results(spark, out)
+        assert {r.partition for r in got_v.collect()} == {"p0", "p1", "p2", "p3"}
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_ledger_releases_its_caches(spark, suite, tmp_path):
+    """After run_with_ledger returns, no RDD it cached (its verdicts,
+    validate()'s fragment union) is still persisted."""
+    unpersist_intermediates()  # clean slate
+    before = _persistent(spark)
+    run_with_ledger(_mkdf(spark), suite, str(tmp_path / "run"), "s1", "r1")
+    assert not _persistent(spark) - before
+
+
+def test_ledger_releases_its_caches_when_a_sink_raises(spark, suite, tmp_path):
+    """A regular file where violations/ should go: the verdicts sink runs
+    and fills the caches, the violations sink raises, and the caches are
+    still released."""
+    out = tmp_path / "run"
+    out.mkdir()
+    (out / "violations").write_text("not a directory")
+    unpersist_intermediates()  # clean slate
+    before = _persistent(spark)
+    with pytest.raises(Exception):
+        run_with_ledger(_mkdf(spark), suite, str(out), "s1", "r1")
+    assert (out / "verdicts").is_dir()
+    assert not _persistent(spark) - before

@@ -388,7 +388,7 @@ def test_salted_uniqueness_matches_plain_groupby_under_skew(spark):
     expected = {f"{k}|{v}": n for (k, v), n in plain.items()}
     for mode in ("hash", "shuffle"):
         suite = RuleSuite("skew", [Rule("kv", "unique", ("k", "v"), {"mode": mode})])
-        verdicts, violations = validate(df, suite, persist_violations=False)
+        verdicts, violations = validate(df, suite)
         found = {r["keys"]: r.detail for r in violations.collect()}
         assert found == {k: f"duplicate key x{n}" for k, n in expected.items()}, mode
         (v,) = verdicts.collect()
@@ -865,16 +865,17 @@ def test_contamination_detects_planted_leak(spark):
 def test_unpersist_intermediates_releases_dedup_caches(spark):
     """Long-lived sessions: every frame the near-dup operators persist is
     released by one unpersist_intermediates() call (round-2 advice)."""
+    from data_validator_guard_spark import session
     from data_validator_guard_spark.operators import dedup
 
     df = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {i} epsilon zeta eta theta") for i in range(20)],
         "doc_id bigint, text string",
     )
-    dedup.unpersist_intermediates()  # clean slate
+    session.unpersist_intermediates()  # clean slate
     dedup.minhash_near_duplicates(df, "text", "doc_id").count()
-    assert dedup.unpersist_intermediates() >= 2  # sig + shingles at minimum
-    assert dedup._PERSISTED == []
+    assert session.unpersist_intermediates() >= 2  # sig + shingles at minimum
+    assert session._PERSISTED == []
 
 
 def test_neardup_separation_on_mutation_tiers(spark):
@@ -2350,10 +2351,10 @@ def test_semantic_near_duplicates_planted(spark):
     vectors always pair (same cell by exact-L2 determinism, cos = 1);
     below-threshold pairs never appear regardless of cell; the pair set is
     monotone in the threshold; max_cell=1 empties every cell."""
-    from data_validator_guard_spark.operators import dedup
     from data_validator_guard_spark.operators.similarity import (
         semantic_near_duplicates,
     )
+    from data_validator_guard_spark.session import unpersist_intermediates
 
     base1 = [1.0] + [0.0] * 7
     base2 = [0.0, 1.0] + [0.0] * 6
@@ -2380,7 +2381,7 @@ def test_semantic_near_duplicates_planted(spark):
     assert (1, 5) not in p95                 # orthogonal clusters
     assert p95 <= pair_set(90)               # threshold monotonicity
     assert pair_set(95, max_cell=1) == set()  # cap drops every cell
-    dedup.unpersist_intermediates()
+    unpersist_intermediates()
 
 
 def test_remove_duplicate_segments_rebuild(spark):
@@ -2838,19 +2839,19 @@ def test_robust_outlier_values_cache_is_released(spark):
     """The histogram robust_outlier_values persists is tracked: one
     unpersist_intermediates() call releases it, so the context no longer
     holds its RDD."""
-    from data_validator_guard_spark.operators import dedup
     from data_validator_guard_spark.operators.stats import robust_outlier_values
+    from data_validator_guard_spark.session import unpersist_intermediates
 
     def persistent() -> set:
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     df = spark.createDataFrame([("g", v) for v in [1, 2, 3, 50]], "g string, v bigint")
-    dedup.unpersist_intermediates()  # clean slate
+    unpersist_intermediates()  # clean slate
     before = persistent()
     robust_outlier_values(df, "g", F.col("v")).collect()
     held = persistent() - before
     assert held, "the histogram should be cached while in use"
-    assert dedup.unpersist_intermediates() == 1
+    assert unpersist_intermediates() == 1
     assert not held & persistent()
 
 
