@@ -11,6 +11,8 @@ Two workload groups:
 
 Forcing strategy: ``df.write.format("noop")`` — full materialization of every
 operator with no sink cost.
+
+Per-layer split of one validation run (Spark's own metrics): ``python3 dvgbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
@@ -139,31 +141,6 @@ def main() -> None:
     timings["validate_synth"] = round(validate_sec, 3)
     n_violations = violations.count()  # cached fragments + cheap row recount
 
-    # per-suite breakdown (BASELINE.md protocol item 4): time each rule
-    # family standalone so regressions are attributable.
-    from data_validator_guard_spark.rules import (
-        AGG_LEVEL_TYPES,
-        ROW_LEVEL_TYPES,
-        RuleSuite,
-    )
-
-    breakdown = {}
-    families = {
-        "row_agg": [r for r in suite.rules if r.type in ROW_LEVEL_TYPES | AGG_LEVEL_TYPES
-                    or (r.type == "foreign_key" and r.params.get("inline"))],
-        "unique": [r for r in suite.rules if r.type in ("unique", "unique_normalized")],
-        "drift": [r for r in suite.rules if r.type == "drift"],
-    }
-    for fam, rules in families.items():
-        if not rules:
-            continue
-        sub = RuleSuite(suite.name + "_" + fam, rules, suite.partition_by, suite.key_cols)
-        t0 = time.perf_counter()
-        v, x = validate(src, sub)
-        _force(v)
-        _force(x)
-        breakdown[fam] = round(time.perf_counter() - t0, 3)
-
     # high-violation leg (round-2 verdict #9): violations/sec on the happy
     # path is ~60x below validated rows/s, which is fine while violations are
     # rare — this leg plants a ~10% defect rate (blank paths) at scan time so
@@ -214,7 +191,6 @@ def main() -> None:
         "hiviol_validated_rows_per_sec": round(SYNTH_ROWS / hv_sec, 1),
         "hiviol_violations": hv_n,
         "hiviol_violations_per_sec": round(hv_n / hv_sec, 1),
-        "validate_breakdown": breakdown,
         "cpus": cpus,
     }
     print(json.dumps(out))

@@ -62,7 +62,7 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_validator_guard_spark.functions import is_blank, normalized
+from data_validator_guard_spark.functions import is_blank, normalized, partition_value
 from data_validator_guard_spark.operators.uniqueness import duplicate_keys
 from data_validator_guard_spark.rules import (
     AGG_LEVEL_TYPES,
@@ -463,9 +463,7 @@ def validate(
     them.
     """
     spark = df.sparkSession
-    # null-safe partition value: verdict/violation counts join on partition,
-    # and NULL keys would silently drop rows in that join.
-    part = F.coalesce(F.expr(suite.partition_by).cast("string"), F.lit("__null__"))
+    part = partition_value(suite.partition_by)
     keys = (
         F.concat_ws("|", *[F.col(k).cast("string") for k in suite.key_cols])
         if suite.key_cols
@@ -741,23 +739,17 @@ def validate(
         # applied LAST, on the returned frame only: every verdict count above
         # derives from counters/fragment sums, so sampling here can never
         # skew n_violations — it only bounds what is materialized.
-        from data_validator_guard_spark.operators.sampling import (
-            HASH_SPACE,
-            PPM,
-            _hash_position,
-        )
+        from data_validator_guard_spark.operators.sampling import PPM, hash_keep
 
         if not (0 <= violation_sample_ppm <= PPM):
             raise ValueError(
                 f"violation_sample_ppm must be in [0, {PPM}], got {violation_sample_ppm}"
             )
-        pos = _hash_position(
-            F.concat_ws("\x1f", "rule_id", "partition", "keys", "detail")
-        ).cast("decimal(38,0)")
         violations = violations.filter(
-            pos * F.lit(PPM).cast("decimal(38,0)")
-            < F.lit(violation_sample_ppm).cast("decimal(38,0)")
-            * F.lit(HASH_SPACE).cast("decimal(38,0)")
+            hash_keep(
+                F.concat_ws("\x1f", "rule_id", "partition", "keys", "detail"),
+                violation_sample_ppm,
+            )
         )
     return verdicts, violations
 

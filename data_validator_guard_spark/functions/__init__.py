@@ -4,6 +4,12 @@ These are the vectorized equivalents of the reference's per-row Python lambdas
 (`/root/reference/validation/maganamed_validation.py:108-263` uses
 ``df.apply(axis=1)`` for every one of these). Everything here stays JVM-side
 inside whole-stage codegen — no Python UDFs.
+
+:func:`partition_value` is the one place a ``partition_by`` expression
+becomes a partition value: the engine's verdicts and violations, the
+ledger's resume filter and its ``stats/`` partials, the snapshot diff and
+every per-partition stats/sketch operator call it, so a NULL partition
+carries the same label in all of them.
 """
 
 from __future__ import annotations
@@ -28,6 +34,18 @@ def is_blank(c: Column | str) -> Column:
     (and every SQL oracle) keep it non-blank."""
     col = F.col(c) if isinstance(c, str) else c
     return col.isNull() | col.cast("string").rlike(r"\A *\z")
+
+
+def partition_value(partition_by: str) -> Column:
+    """The partition value of a row: ``partition_by`` (a SQL expression)
+    cast to string, with NULL rendered as ``'__null__'``. Unaliased.
+
+    NULL gets a literal label for two reasons: verdict counts join on
+    ``partition``, and a NULL key would silently drop rows in that join;
+    and a partitioned write (the ledger's ``pt`` directories) puts a NULL
+    value under ``__HIVE_DEFAULT_PARTITION__``, which reads back as NULL
+    and so no longer matches the label the verdicts carry."""
+    return F.coalesce(F.expr(partition_by).cast("string"), F.lit("__null__"))
 
 
 def normalized(c: Column | str) -> Column:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_validator_guard_spark.engine import validate
+from data_validator_guard_spark.functions import partition_value
 from data_validator_guard_spark.rules import RuleSuite
 from data_validator_guard_spark.session import track_persist, unpersist_intermediates
 
@@ -83,7 +84,11 @@ def run_with_ledger(
     stat partials (``operators.stats.partial_column_stats``) are written
     under ``stats/`` too — table-level stats over ANY set of completed
     snapshots/partitions then come from ``merge_column_stats`` over the
-    stored partials, no rescan. Returns counters for observability.
+    stored partials, no rescan. Verdicts, violations, ``stats/`` partials and
+    the ledger's resume filter all derive the partition with
+    ``functions.partition_value``, so the ``stats/`` partitions match the
+    verdict partitions, a NULL partition value included.
+    Returns counters for observability.
 
     Dynamic overwrite is set on each partitioned write, never on the
     session, so the caller's ``partitionOverwriteMode`` is left unchanged.
@@ -100,8 +105,7 @@ def run_with_ledger(
     violations_path = os.path.join(out_dir, "violations")
 
     done = done_partitions(spark, ledger_path, snapshot_id, rule_version)
-    part = F.coalesce(F.expr(suite.partition_by).cast("string"), F.lit("__null__"))
-    pending = df.filter(~part.isin(done)) if done else df
+    pending = df.filter(~partition_value(suite.partition_by).isin(done)) if done else df
 
     # violation_sample_ppm bounds the EMITTED violation rows (engine.validate
     # docstring); ledger rows_failed comes from verdict counters, so resume

@@ -52,6 +52,18 @@ def _hash_position(id_col: Column) -> Column:
     )
 
 
+def hash_keep(key: Column, ppm: int | Column) -> Column:
+    """The keep predicate of every hash sample here:
+    ``hash_position(key) * 10^6 < ppm * 2^48``, an exact integer
+    cross-multiplication on decimal(38,0) (overflow-proof under ANSI mode;
+    no float ever decides membership). ``ppm`` is a literal rate or a
+    per-row rate column; the caller range-checks it."""
+    rate = ppm if isinstance(ppm, Column) else F.lit(ppm)
+    pos = _hash_position(key).cast("decimal(38,0)")
+    bound = rate.cast("decimal(38,0)") * F.lit(HASH_SPACE).cast("decimal(38,0)")
+    return pos * F.lit(PPM).cast("decimal(38,0)") < bound
+
+
 def hash_sample(df: DataFrame, id_col: str, fraction_ppm: int) -> DataFrame:
     """Deterministic Bernoulli-style sample of ~``fraction_ppm``/10^6 rows.
 
@@ -67,11 +79,7 @@ def hash_sample(df: DataFrame, id_col: str, fraction_ppm: int) -> DataFrame:
     """
     if not (0 <= fraction_ppm <= PPM):
         raise ValueError(f"fraction_ppm must be in [0, {PPM}], got {fraction_ppm}")
-    pos = _hash_position(F.col(id_col)).cast("decimal(38,0)")
-    bound = F.lit(fraction_ppm).cast("decimal(38,0)") * F.lit(HASH_SPACE).cast(
-        "decimal(38,0)"
-    )
-    return df.filter(pos * F.lit(PPM).cast("decimal(38,0)") < bound)
+    return df.filter(hash_keep(F.col(id_col), fraction_ppm))
 
 
 def mixture_sample(
@@ -111,9 +119,7 @@ def mixture_sample(
     ppm: Column = F.lit(default_ppm)
     for g, v in ppm_by_group.items():
         ppm = F.when(F.col(group_col) == F.lit(g), F.lit(v)).otherwise(ppm)
-    pos = _hash_position(F.col(id_col)).cast("decimal(38,0)")
-    bound = ppm.cast("decimal(38,0)") * F.lit(HASH_SPACE).cast("decimal(38,0)")
-    return df.filter(pos * F.lit(PPM).cast("decimal(38,0)") < bound)
+    return df.filter(hash_keep(F.col(id_col), ppm))
 
 
 def stratified_sample_n(

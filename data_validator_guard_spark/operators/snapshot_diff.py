@@ -29,6 +29,13 @@ Partitions present only in the OLD snapshot (dropped data) disappear from the
 merged verdicts — their rows no longer exist to certify. Partitions present
 only in the NEW snapshot are recomputed like any changed partition.
 
+Every partition value here — fingerprints, the re-validation filter, carried
+verdicts and carried stat partials — comes from ``functions.partition_value``,
+the function the engine and the ledger use. So a NULL partition value has
+one label everywhere, the ``stats/`` partials match the verdict
+partitions, and a carried NULL partition survives the ``isin`` filter (a raw
+NULL would make ``NOT partition IN (...)`` NULL and drop the row).
+
 Collision note: 2x48-bit sums make an accidental fingerprint collision
 vanishingly unlikely but not impossible; a production deployment that needs
 cryptographic certainty can widen to the full md5 (four 32-hex-digit sums)
@@ -43,11 +50,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_validator_guard_spark.functions import partition_value
 from data_validator_guard_spark.rules import RuleSuite
-
-def _partition_col(suite_partition_by: str) -> Column:
-    # identical null-safe rendering to engine.validate's partition column
-    return F.coalesce(F.expr(suite_partition_by).cast("string"), F.lit("__null__"))
 
 
 def _canonical_field(df: DataFrame, c: str) -> Column:
@@ -108,7 +112,7 @@ def partition_fingerprints(
     img = _row_image(df, fingerprint_cols)
     lo = F.conv(F.substring(img, 1, 12), 16, 10).cast("bigint").cast("decimal(38,0)")
     hi = F.conv(F.substring(img, 13, 12), 16, 10).cast("bigint").cast("decimal(38,0)")
-    return df.groupBy(_partition_col(partition_by).alias("partition")).agg(
+    return df.groupBy(partition_value(partition_by).alias("partition")).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(lo).alias("fp_lo"),
         F.sum(hi).alias("fp_hi"),
@@ -242,7 +246,6 @@ def incremental_validate_full(
         partition_fingerprints(new_df, suite.partition_by, cols),
         max_partitions=max_partitions,
     )
-    part = _partition_col(suite.partition_by)
     # only user-supplied frames need the guards: an inline-computed prior
     # shares the suite by construction.
     if prior_violations is not None:
@@ -264,7 +267,9 @@ def incremental_validate_full(
     )
     if not changed:
         return carried_v, carried_x
-    fresh_v, fresh_x = validate(new_df.filter(part.isin(changed)), suite)
+    fresh_v, fresh_x = validate(
+        new_df.filter(partition_value(suite.partition_by).isin(changed)), suite
+    )
     return (
         carried_v.unionByName(fresh_v.withColumn("recomputed", F.lit(True))),
         carried_x.unionByName(fresh_x.withColumn("recomputed", F.lit(True))),
@@ -333,9 +338,8 @@ def incremental_column_stats(
     )
     if not changed:
         return carried
-    part = _partition_col(partition_by)
     fresh = partial_column_stats(
-        new_df.filter(part.isin(changed)), list(columns), partition_by
+        new_df.filter(partition_value(partition_by).isin(changed)), list(columns), partition_by
     )
     return carried.unionByName(fresh.withColumn("recomputed", F.lit(True)))
 

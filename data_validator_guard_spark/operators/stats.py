@@ -9,6 +9,11 @@ length stats, cardinality, and regex-conformance rate for every profiled
 column at once. Catalyst turns this into partial+final hash aggregation with
 column pruning down to exactly the profiled columns; at 10^12 rows this is one
 scan regardless of how many columns/stats are requested.
+
+Every per-partition operator here (stats, partials, outlier report, the
+count-min, quantile and Bloom sketches, the correlation profile) derives its
+``partition`` column with ``functions.partition_value``, so a NULL partition
+value gets the same label as in the engine's verdicts and the ledger.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_validator_guard_spark.functions import is_blank
+from data_validator_guard_spark.functions import is_blank, partition_value
 from data_validator_guard_spark.session import track_persist
 
 
@@ -45,7 +50,7 @@ def column_stats(
     across engines with no float-rounding hazards.
     """
     regex_patterns = regex_patterns or {}
-    part = F.expr(partition_by).cast("string").alias("partition")
+    part = partition_value(partition_by).alias("partition")
 
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in columns:
@@ -127,7 +132,7 @@ def partial_column_stats(
     ``hll_union_agg``, estimate = ``hll_sketch_estimate``, identical to
     estimating over the full data.
     """
-    part = F.expr(partition_by).cast("string").alias("partition")
+    part = partition_value(partition_by).alias("partition")
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in columns:
         col = F.col(c)
@@ -399,7 +404,7 @@ def partition_outlier_report(
     re-aggregate broadcast back — the partials frame is partition-count
     sized, so the second pass is free; nothing re-reads the input.
     """
-    part = F.coalesce(F.expr(partition_by).cast("string"), F.lit("__null__"))
+    part = partition_value(partition_by)
     v = F.expr(value) if isinstance(value, str) else value
     vt = df.select(v.alias("__v")).schema[0].dataType.simpleString()
     if vt in ("double", "float") or (
@@ -490,7 +495,7 @@ def cms_partial(
     so the shuffle is skew-free even over a hot key."""
     if depth <= 0 or width <= 0:
         raise ValueError(f"depth/width must be positive, got {depth}/{width}")
-    part = F.expr(partition_by).cast("string").alias("partition")
+    part = partition_value(partition_by).alias("partition")
     k = key.cast("string")
     rows = df.filter(key.isNotNull()).select(
         part,
@@ -586,7 +591,7 @@ def quantile_sketch_partial(
         raise ValueError(f"k must be positive, got {k}")
     if n_salts <= 0:
         raise ValueError(f"n_salts must be positive, got {n_salts}")
-    part = F.expr(partition_by).cast("string").alias("partition")
+    part = partition_value(partition_by).alias("partition")
     narrow = df.filter(
         F.col(value_col).isNotNull() & F.col(id_col).isNotNull()
     ).select(
@@ -707,7 +712,7 @@ def bloom_partial(
         raise ValueError(f"m must be positive, got {m}")
     if d <= 0:
         raise ValueError(f"d must be positive, got {d}")
-    part = F.expr(partition_by).cast("string").alias("partition")
+    part = partition_value(partition_by).alias("partition")
     key = F.col(key_col)
     rows = df.filter(key.isNotNull()).select(
         part, F.explode(F.array(*[_bloom_pos(key, i, m) for i in range(d)])).alias("pos")
@@ -817,7 +822,7 @@ def correlation_profile(
     def D(c: Column) -> Column:
         return c.cast("decimal(38,0)")
 
-    part = F.coalesce(F.expr(partition_by).cast("string"), F.lit("__null__"))
+    part = partition_value(partition_by)
     aggs = []
     pairs = [
         (cols[i], cols[j]) for i in range(len(cols)) for j in range(i + 1, len(cols))

@@ -412,7 +412,7 @@ def q_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 _QSK_ORACLE = """
 WITH pr AS (
-  SELECT CAST(lang AS VARCHAR) AS p,
+  SELECT COALESCE(CAST(lang AS VARCHAR), '__null__') AS p,
          md5('qsk:' || CAST(doc_id AS VARCHAR)) AS pri,
          CAST(n_chars AS BIGINT) AS v
   FROM documents
@@ -556,7 +556,7 @@ def q_bloom_membership_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     letters), so the correlations are real structure, not plants.
 # =====================================================================
 _CORR_FIELDS = """
-  SELECT lang,
+  SELECT COALESCE(CAST(lang AS VARCHAR), '__null__') AS lang,
          CAST(n_chars AS BIGINT) AS n_chars,
          CAST(length(text) - length(replace(text, ' ', '')) AS BIGINT) AS n_spaces,
          CAST(length(text) - length(regexp_replace(text, '[a-z]', '', 'g')) AS BIGINT) AS n_lower

@@ -20,6 +20,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from data_validator_guard_spark.engine import validate
 from data_validator_guard_spark.rules import RuleSuite
+from data_validator_guard_spark.session import unpersist_intermediates
 
 
 def validate_stream(
@@ -34,22 +35,29 @@ def validate_stream(
 
     ``available_now=True`` drains everything currently present and stops —
     the batch-resume idiom; ``False`` runs continuously. Outputs are appended
-    under ``out_dir`` with a ``batch_id`` provenance column.
+    under ``out_dir`` with a ``batch_id`` provenance column. Each micro-batch
+    releases ``validate``'s cached frames after its sinks
+    (``session.unpersist_intermediates``, as ``ledger.run_with_ledger``
+    does), so a long-running stream holds no cache between batches.
     """
     stream = spark.readStream.schema(schema).parquet(input_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        verdicts, violations = validate(batch_df, suite)
-        (
-            verdicts.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(os.path.join(out_dir, "verdicts"))
-        )
-        (
-            violations.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(os.path.join(out_dir, "violations"))
-        )
+        try:
+            verdicts, violations = validate(batch_df, suite)
+            (
+                verdicts.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("append")
+                .parquet(os.path.join(out_dir, "verdicts"))
+            )
+            (
+                violations.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("append")
+                .parquet(os.path.join(out_dir, "violations"))
+            )
+        finally:
+            # this micro-batch's cached frames, even when a sink raises
+            unpersist_intermediates()
 
     writer = (
         stream.writeStream.foreachBatch(process)

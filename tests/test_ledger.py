@@ -188,3 +188,23 @@ def test_ledger_releases_its_caches_when_a_sink_raises(spark, suite, tmp_path):
         run_with_ledger(_mkdf(spark), suite, str(out), "s1", "r1")
     assert (out / "verdicts").is_dir()
     assert not _persistent(spark) - before
+
+
+def test_stats_partitions_match_verdict_partitions(spark, suite, tmp_path):
+    """A NULL partition value carries one label in every ledger output: the
+    stored stat partials can be matched to the verdicts (and so to the
+    ledger's done partitions) partition by partition."""
+    rows = [(None if i % 5 == 0 else f"p{i % 2}", i) for i in range(40)]
+    df = spark.createDataFrame(rows, "grp string, v int")
+    out = str(tmp_path / "run")
+    run_with_ledger(df, suite, out, "s1", "r1", stats_columns=["v"])
+
+    def labels(sub: str) -> set:
+        got = spark.read.parquet(f"{out}/{sub}").select("partition", "pt").distinct()
+        return {(r.partition, r.pt) for r in got.collect()}
+
+    verdict_labels = labels("verdicts")
+    assert {p for p, _ in verdict_labels} == {"__null__", "p0", "p1"}
+    assert labels("stats") == verdict_labels
+    done = spark.read.parquet(f"{out}/ledger").select("partition").distinct()
+    assert {r.partition for r in done.collect()} == {p for p, _ in verdict_labels}

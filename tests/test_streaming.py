@@ -42,6 +42,28 @@ def test_stream_validates_each_file_once(spark, tmp_path):
     assert v2.select("batch_id").distinct().count() == 2
 
 
+def test_stream_releases_each_batch_caches(spark, tmp_path):
+    """Each micro-batch releases validate()'s cached frames after its
+    sinks: once the stream drains, the persist registry is empty and no
+    RDD the run added is still persisted."""
+    from data_validator_guard_spark import session
+
+    inp = str(tmp_path / "in")
+    suite = RuleSuite(
+        "s",
+        [Rule("v_not_null", "not_null", ("v",)), Rule("v_unique", "unique", ("grp", "v"))],
+        partition_by="grp",
+    )
+    _write_batch(spark, inp, [("a", 1), ("a", 1), ("b", None)])
+    session.unpersist_intermediates()  # clean slate
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    q = validate_stream(spark, inp, SCHEMA, suite, str(tmp_path / "out"))
+    q.awaitTermination(120)
+    assert not q.isActive
+    assert session._PERSISTED == []
+    assert not set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
+
+
 def test_windowed_counts_batch_parity(spark):
     df = spark.createDataFrame(
         [
