@@ -27,7 +27,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_validator_guard_spark.engine import validate
@@ -148,8 +148,12 @@ def run_with_ledger(
                 F.lit(time.time()).alias("ts"),
             )
         )
-        entries.write.mode("append").parquet(ledger_path)
-        n_new = entries.count()
+        # counted on the append itself: no second job over the entries
+        written = Observation()
+        entries.observe(written, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(
+            ledger_path
+        )
+        n_new = written.get["n"]
     finally:
         # this batch's verdicts and validate()'s cached frames, even when a
         # sink raises

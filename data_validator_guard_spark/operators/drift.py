@@ -25,6 +25,7 @@ batched.
 from __future__ import annotations
 
 import math
+from functools import cache
 from typing import Callable, Sequence
 
 import numpy as np
@@ -123,22 +124,24 @@ def _counts(
     return m, tot
 
 
+def _tag(side: int, key_cols: list[Column]) -> list[Column]:
+    """The select list that tags a histogram ``(grp, bucket, n)`` as one
+    side of the union: ``side int, *keys string, grp string, bucket bigint,
+    n bigint``. A NULL count reads as 0."""
+    return [
+        F.lit(side).alias("side"),
+        *key_cols,
+        F.col("grp").cast("string").alias("grp"),
+        F.col("bucket").cast("bigint").alias("bucket"),
+        F.coalesce(F.col("n").cast("bigint"), F.lit(0)).alias("n"),
+    ]
+
+
 def _one_group(current: DataFrame, baseline: DataFrame, *keys: str) -> GroupedData:
-    """Both histograms unioned, tagged by ``side``, as ONE group:
-    ``side int, *keys string, grp string, bucket bigint, n bigint``. The
-    baseline rows carry NULL ``keys``; a NULL count reads as 0."""
-
-    def tag(h: DataFrame, side: int, key_cols: list[Column]) -> DataFrame:
-        return h.select(
-            F.lit(side).alias("side"),
-            *key_cols,
-            F.col("grp").cast("string").alias("grp"),
-            F.col("bucket").cast("bigint").alias("bucket"),
-            F.coalesce(F.col("n").cast("bigint"), F.lit(0)).alias("n"),
-        )
-
-    cur = tag(current, SIDE_CUR, [F.col(k).cast("string").alias(k) for k in keys])
-    base = tag(baseline, SIDE_BASE, [F.lit(None).cast("string").alias(k) for k in keys])
+    """Both histograms unioned, tagged by ``side`` (:func:`_tag`), as ONE
+    group. The baseline rows carry NULL ``keys``."""
+    cur = current.select(*_tag(SIDE_CUR, [F.col(k).cast("string").alias(k) for k in keys]))
+    base = baseline.select(*_tag(SIDE_BASE, [F.lit(None).cast("string").alias(k) for k in keys]))
     return cur.unionByName(base).groupBy(F.lit(0).alias("__all"))
 
 
@@ -280,26 +283,38 @@ def drift_violations(
 
     Returns a weighted violations fragment
     ``(rule_id, partition, keys, detail, weight)`` — one row per drifted
-    group, weight 1.
+    group, weight 1. Same as ``drift_fragment(rule, part)(df, cur)``.
     """
+    return drift_fragment(rule, part)(df, cur)
+
+
+def drift_fragment(
+    rule: Rule, part: Column
+) -> Callable[[DataFrame, DataFrame | None], DataFrame]:
+    """:func:`drift_violations` compiled once: the column expressions and
+    the tagged baseline are built here (the grain of a histogram of ``df``
+    on the first call without ``cur``), and the returned ``bind(df, cur)``
+    makes only the DataFrame calls that read its input. The engine keeps
+    the returned function on its compiled suite."""
     p = rule.params
     edges = p["edges"]
-    group_col = p["group_by"]
-    value = F.expr(p["value"])
-    threshold = float(p.get("threshold", 0.2))
-    baseline: DataFrame = p["baseline"]
-
-    if cur is None:
-        cur = df.groupBy(
-            part.alias("partition"), F.col(group_col).alias("grp"), bucketize(value, edges).alias("bucket")
-        ).agg(F.count(F.lit(1)).alias("n"))
     n_buckets = len(edges)
-    scores = _one_group(cur, baseline, "partition").applyInPandas(
-        lambda pdf: _drift_frame(pdf, n_buckets),
-        "partition string, grp string, psi double",
-    )
-    drifted = scores.filter(F.col("psi") > F.lit(threshold))
-    return drifted.select(
+    threshold = float(p.get("threshold", 0.2))
+
+    @cache  # built on first need: the engine's first drift rule never needs it
+    def grain() -> list[Column]:
+        return [
+            part.alias("partition"),
+            F.col(p["group_by"]).alias("grp"),
+            bucketize(F.expr(p["value"]), edges).alias("bucket"),
+        ]
+
+    count = F.count(F.lit(1)).alias("n")
+    cur_side = _tag(SIDE_CUR, [F.col("partition").cast("string").alias("partition")])
+    base = p["baseline"].select(*_tag(SIDE_BASE, [F.lit(None).cast("string").alias("partition")]))
+    one_group = F.lit(0).alias("__all")
+    drifted = F.col("psi") > F.lit(threshold)
+    out = [
         F.lit(rule.rule_id).alias("rule_id"),
         F.col("partition"),
         F.col("grp").alias("keys"),
@@ -307,4 +322,20 @@ def drift_violations(
             F.lit("psi="), F.round(F.col("psi"), 6).cast("string"), F.lit(f" > {threshold}")
         ).alias("detail"),
         F.lit(1).cast("bigint").alias("weight"),
-    )
+    ]
+
+    def score(pdf):  # no type hints: applyInPandas would read them as the UDF kind
+        return _drift_frame(pdf, n_buckets)
+
+    def bind(df: DataFrame, cur: DataFrame | None = None) -> DataFrame:
+        if cur is None:
+            cur = df.groupBy(*grain()).agg(count)
+        scores = (
+            cur.select(*cur_side)
+            .unionByName(base)
+            .groupBy(one_group)
+            .applyInPandas(score, "partition string, grp string, psi double")
+        )
+        return scores.filter(drifted).select(*out)
+
+    return bind

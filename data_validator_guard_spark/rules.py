@@ -79,7 +79,12 @@ rejects unknown ids and cycles at definition time.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Mapping, Sequence
+from functools import cached_property
+from types import MappingProxyType
+from typing import TYPE_CHECKING, Any, Mapping, Sequence
+
+if TYPE_CHECKING:
+    from data_validator_guard_spark.engine import CompiledSuite
 
 ROW_LEVEL_TYPES = frozenset(
     {
@@ -140,7 +145,11 @@ _NEEDS_COLUMNS = ROW_LEVEL_TYPES - {"cross_column", "completeness", "range_toler
 @dataclass(frozen=True)
 class Rule:
     """One named check. ``columns`` are the checked columns; ``params`` carry
-    type-specific arguments (pattern, values, lo/hi, dim, group_by, ...)."""
+    type-specific arguments (pattern, values, lo/hi, dim, group_by, ...).
+
+    ``params`` is stored as a read-only copy of the mapping passed in, so a
+    suite's compiled form cannot go stale through a mutated rule: assigning
+    to ``rule.params[...]`` raises ``TypeError``. The copy is shallow."""
 
     rule_id: str
     type: str
@@ -154,6 +163,7 @@ class Rule:
             object.__setattr__(self, "columns", (self.columns,))
         else:
             object.__setattr__(self, "columns", tuple(self.columns))
+        object.__setattr__(self, "params", MappingProxyType(dict(self.params)))
         missing = [
             k for k in REQUIRED_PARAMS.get(self.type, ()) if k not in self.params
         ]
@@ -183,6 +193,9 @@ class RuleSuite:
     reference's per-table verdict generalized to per-partition, per the north
     rule). ``key_cols``: columns identifying a row in violation reports
     (the reference's "offending keys").
+
+    :attr:`compiled` is the suite's compiled form, built on first use and
+    kept on this object for its lifetime.
     """
 
     name: str
@@ -211,6 +224,15 @@ class RuleSuite:
                 if dep == r.rule_id:
                     raise ValueError(f"rule {r.rule_id!r} depends_on itself")
         self.dependency_closure()  # raises on cycles
+
+    @cached_property
+    def compiled(self) -> CompiledSuite:
+        """``engine.compile(self)``, built on first access (the first
+        ``validate`` call) and kept on this object, so every later call
+        binds it to its input without compiling again."""
+        from data_validator_guard_spark.engine import compile
+
+        return compile(self)
 
     def dependency_closure(self) -> dict[str, frozenset[str]]:
         """Transitive ``depends_on`` closure per rule (empty mapping when no

@@ -753,3 +753,147 @@ def test_validate_caches_are_released(spark):
     assert len(added) >= 2, "the fine histogram and the fragment union are cached"
     assert unpersist_intermediates() >= 2
     assert not added & persistent()
+
+
+def test_rule_params_are_read_only():
+    """A Rule keeps a read-only copy of its params: the caller's dict can
+    change afterwards without reaching the rule, and assigning through the
+    rule raises at once, so a suite's compiled form cannot go stale."""
+    params = {"pattern": "^a"}
+    r = Rule("r", "regex_match", ("a",), params)
+    params["pattern"] = "^b"
+    assert r.params["pattern"] == "^a"
+    with pytest.raises(TypeError):
+        r.params["pattern"] = "^c"
+    assert r == Rule("r", "regex_match", ("a",), {"pattern": "^a"})
+
+
+def _jobs_started(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dvg-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs started")
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_validate_compiles_a_suite_once(spark):
+    """The flagship-shaped suite compiles on its first validate: the
+    inline-FK collect starts 2 jobs before any action. A second validate
+    reuses the compiled form and starts none. A bad violation_sample_ppm
+    fails before any job, even on a suite never compiled."""
+    from pyspark.sql import functions as F
+
+    from data_validator_guard_spark.operators.drift import histogram
+    from data_validator_guard_spark.suites import LENGTH_EDGES, source_code_suite
+    from data_validator_guard_spark.synth import source_code_table
+
+    df = source_code_table(spark, 2_000, seed=3)
+    baseline = histogram(df, "lang", F.length("content"), LENGTH_EDGES)
+    suite = source_code_suite(spark, baseline_hist=baseline)
+
+    def bad_ppm():
+        with pytest.raises(ValueError, match="violation_sample_ppm"):
+            validate(df, suite, violation_sample_ppm=-1)
+
+    assert _jobs_started(spark, bad_ppm) == 0
+    assert _jobs_started(spark, lambda: validate(df, suite)) == 2
+    compiled = suite.compiled
+    assert _jobs_started(spark, lambda: validate(df, suite)) == 0
+    assert suite.compiled is compiled
+
+
+def _compile_suite(spark):
+    """A suite with a where guard, depends_on, exact cardinality, an inline
+    FK, unique and drift. Built anew on each call."""
+    from pyspark.sql import functions as F
+
+    from data_validator_guard_spark.operators.drift import histogram
+
+    dim = spark.createDataFrame([("en",), ("de",)], "lang string")
+    edges = [0.0, 4.0, 8.0]
+    base = spark.createDataFrame(
+        [(i, ["en", "de"][i % 2], "x" * (i % 10)) for i in range(40)],
+        "id bigint, lang string, txt string",
+    )
+    return RuleSuite(
+        "memo",
+        [
+            Rule("lang_fk", "foreign_key", ("lang",), {"dim": dim, "inline": True}),
+            Rule("id_unique", "unique", ("id",)),
+            Rule("txt_set", "not_null", ("txt",), {"where": "lang = 'en'"}),
+            Rule("txt_len", "length_range", ("txt",), {"hi": 6, "depends_on": ["lang_fk"]}),
+            Rule("lang_card", "cardinality_range", ("lang",), {"lo": 1, "hi": 2, "exact": True}),
+            Rule(
+                "txt_drift",
+                "drift",
+                ("txt",),
+                {
+                    "group_by": "lang",
+                    "value": "length(txt)",
+                    "edges": edges,
+                    "baseline": histogram(base, "lang", F.length("txt"), edges),
+                    "threshold": 0.1,
+                },
+            ),
+        ],
+        partition_by="p",
+        key_cols=("id",),
+    )
+
+
+def test_memoized_suite_matches_fresh_suite(spark):
+    """Validating two different inputs with one suite (compiled once) gives
+    exactly what a freshly built suite gives for each input."""
+    schema = "id bigint, p string, lang string, txt string"
+    first = spark.createDataFrame(
+        [(i, "a" if i < 12 else "b", ["en", "de", "xx"][i % 3], None if i % 5 == 0 else "y" * (i % 9))
+         for i in range(24)]
+        + [(3, "a", "en", "dup")],
+        schema,
+    )
+    second = spark.createDataFrame(
+        [(i, "b" if i % 2 else "c", ["en", "de"][i % 2], "z" * (i % 4)) for i in range(30)]
+        + [(7, "b", "fr", None), (7, "b", "en", None)],
+        schema,
+    )
+
+    def results(df, suite):
+        verdicts, violations = validate(df, suite)
+        return sorted(map(tuple, verdicts.collect()), key=repr), sorted(
+            map(tuple, violations.collect()), key=repr
+        )
+
+    memo = _compile_suite(spark)
+    for df in (first, second):
+        assert results(df, memo) == results(df, _compile_suite(spark))
+    assert results(first, memo) != results(second, memo)
+
+
+def test_suites_with_different_dims_keep_separate_memos(spark):
+    df = spark.createDataFrame(
+        [(1, "en"), (2, "de"), (3, "xx")], "id bigint, lang string"
+    )
+
+    def suite(langs):
+        dim = spark.createDataFrame([(v,) for v in langs], "lang string")
+        return RuleSuite(
+            "fk",
+            [Rule("lang_fk", "foreign_key", ("lang",), {"dim": dim, "inline": True})],
+            key_cols=("id",),
+        )
+
+    def flagged(s):
+        return sorted(r.keys for r in validate(df, s)[1].collect())
+
+    wide, narrow = suite(["en", "de"]), suite(["en"])
+    assert flagged(wide) == ["3"]
+    assert flagged(narrow) == ["2", "3"]
+    assert flagged(wide) == ["3"]
+    assert wide.compiled is not narrow.compiled
