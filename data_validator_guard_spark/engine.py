@@ -249,26 +249,20 @@ def _unique_fragment(rule: Rule, part: Column) -> Fragment:
     weight = group size, matching the reference's ``duplicated(keep=False)``
     row count (`general_validation.py:19-27`).
 
-    Default mode ``hash``: count (partition, xxhash64(keys)) — 8-byte hashes
-    instead of full key strings (at (repo, path, commit) width this cuts the
-    exchange ~6x) — then broadcast the (assumed-few) duplicate hashes back
-    and count the full keys of the matching rows only, so hash collisions can
-    only create candidates, never false violations.
-
-    Mode ``shuffle`` (``params={"mode": "shuffle"}``): count the full keys of
-    every row — for pathological inputs where duplicates are a large fraction
-    and the hash broadcast would be big.
+    One plan: count (partition, xxhash64(keys)) — 8-byte hashes instead of
+    full key strings (at (repo, path, commit) width this cuts the exchange
+    ~6x) — then broadcast the (assumed-few) duplicate hashes back and count
+    the full keys of the matching rows only, so hash collisions can only
+    create candidates, never false violations.
     """
     norm = rule.type == "unique_normalized"
     keynames = [f"__k{i}" for i in range(len(rule.columns))]
     keyed_cols = [part.alias("partition")] + [
         (normalized(c) if norm else F.col(c)).alias(k) for c, k in zip(rule.columns, keynames)
     ]
-    hashed = rule.params.get("mode", "hash") == "hash"
-    if hashed:
-        key_hash = F.xxhash64(*keynames)
-        n_hash = F.count(F.lit(1)).alias("__n")
-        repeated = F.col("__n") > 1
+    key_hash = F.xxhash64(*keynames)
+    n_hash = F.count(F.lit(1)).alias("__n")
+    repeated = F.col("__n") > 1
     out = [
         F.lit(rule.rule_id).alias("rule_id"),
         F.col("partition"),
@@ -278,16 +272,14 @@ def _unique_fragment(rule: Rule, part: Column) -> Fragment:
     ]
 
     def bind(df: DataFrame) -> DataFrame:
-        keyed = df.select(*keyed_cols)
-        if hashed:
-            keyed = keyed.withColumn("__h", key_hash)
-            dup_h = (
-                keyed.groupBy("partition", "__h")
-                .agg(n_hash)
-                .filter(repeated)
-                .select("partition", "__h")
-            )
-            keyed = keyed.join(F.broadcast(dup_h), ["partition", "__h"], "left_semi")
+        keyed = df.select(*keyed_cols).withColumn("__h", key_hash)
+        dup_h = (
+            keyed.groupBy("partition", "__h")
+            .agg(n_hash)
+            .filter(repeated)
+            .select("partition", "__h")
+        )
+        keyed = keyed.join(F.broadcast(dup_h), ["partition", "__h"], "left_semi")
         return duplicate_keys(keyed, ["partition", *keynames]).select(*out)
 
     return bind
@@ -324,12 +316,11 @@ def _join_consistency_violations(
     ``params["expr"]`` (a boolean SQL expr over the joined row; the other
     table's columns are exposed under their own names).
 
-    Join strategy: broadcast when ``params["broadcast"]`` (default True —
-    rule-13 "other" tables are code→name dims); pass False for fact-to-fact
-    consistency, which then shuffles on the join keys like any equi-join.
-    With ``require_match=True`` (default) left rows with NO match are
-    violations too (agreement cannot be established) — matching the
-    reference, which reports missing join partners.
+    The dim is collapsed to one row per join key and always broadcast
+    (rule-13 "other" tables are code→name dims). With
+    ``require_match=True`` (default) left rows with NO match are violations
+    too (agreement cannot be established) — matching the reference, which
+    reports missing join partners.
     """
     p = rule.params
     other: DataFrame = p["other"]
@@ -374,11 +365,10 @@ def _join_consistency_violations(
         *[F.first(F.col(c)).alias(c) for c in keep_cols],
         F.count(F.lit(1)).alias("__dim_n"),
     )
-    right = F.broadcast(collapsed) if p.get("broadcast", True) else collapsed
     sel = df.select(
         part.alias("partition"), keys.alias("keys"), *[F.col(c) for c in df.columns]
     )
-    joined = sel.join(right, on, "left")
+    joined = sel.join(F.broadcast(collapsed), on, "left")
     # marker survives the outer join iff the right side matched; the woven
     # assert_true fires on any matched row whose dim key had > 1 dim rows
     # (an unreferenced assert column would be pruned by Catalyst, so it is

@@ -128,10 +128,3 @@ def zorder_key(x: Column, y: Column, bits: int = 8) -> Column:
             + F.shiftleft(F.shiftrightunsigned(yg, b).bitwiseAND(F.lit(1)), 2 * b + 1)
         )
     return z
-
-
-def salt(n_salts: int, *cols: Column | str) -> Column:
-    """Deterministic salt in [0, n_salts) from xxhash64 of the key columns —
-    used to defuse hot-key skew in two-phase aggregations (SURVEY.md §4.3)."""
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.pmod(F.xxhash64(*cs), F.lit(n_salts)).cast("int")

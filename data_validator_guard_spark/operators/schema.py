@@ -33,13 +33,13 @@ _RESULT_SCHEMA = (
 )
 
 
-def schema_contract(
-    spark: SparkSession, df: DataFrame, expected: dict[str, str]
-) -> DataFrame:
-    """Verdict rows for ``df``'s schema vs ``expected`` ({column: spark
-    simpleString type}). One row per union of expected and actual columns;
-    statuses: ``ok`` | ``type_mismatch`` | ``missing`` | ``unexpected``.
-    Pure driver-side metadata — no job is ever launched on ``df``."""
+def compare_schema(
+    df: DataFrame, expected: dict[str, str]
+) -> list[tuple[str, str, str | None, str | None]]:
+    """``(col_name, status, expected_type, actual_type)`` for ``df``'s schema
+    vs ``expected`` ({column: spark simpleString type}). One row per union of
+    expected and actual columns; statuses: ``ok`` | ``type_mismatch`` |
+    ``missing`` | ``unexpected``. Raises on duplicate column names."""
     if not expected:
         raise ValueError("expected spec is empty — nothing to check")
     norm = {}
@@ -66,4 +66,12 @@ def schema_contract(
     for col, got in actual.items():
         if col not in norm:
             rows.append((col, "unexpected", None, got))
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+    return rows
+
+
+def schema_contract(
+    spark: SparkSession, df: DataFrame, expected: dict[str, str]
+) -> DataFrame:
+    """:func:`compare_schema` as a verdict DataFrame. Pure driver-side
+    metadata — no job is ever launched on ``df``."""
+    return spark.createDataFrame(compare_schema(df, expected), _RESULT_SCHEMA)

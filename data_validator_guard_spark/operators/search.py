@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
+from data_validator_guard_spark.operators.schema import compare_schema
+
 
 def search_value(
     spark: SparkSession, tables: dict[str, DataFrame], needle: str
@@ -44,6 +46,9 @@ def codebook(spark: SparkSession, tables: dict[str, DataFrame]) -> DataFrame:
     )
 
 
+_STATUS = {"missing": "missing_column", "unexpected": "unexpected_column"}
+
+
 def schema_check(
     spark: SparkSession,
     tables: dict[str, DataFrame],
@@ -60,28 +65,22 @@ def schema_check(
     actual_type`` with status ∈ 'missing_column' (declared, absent),
     'unexpected_column' (present, undeclared), 'type_mismatch', plus
     'missing_table' for declared tables not supplied. Empty output = schema
-    conforms. Pure metadata — no data scan.
+    conforms. Pure metadata — no data scan. Each supplied table is compared
+    by :func:`schema.compare_schema`, so a table with a duplicated column
+    name raises instead of reporting one of the two.
     """
-    actual = {
-        (t, f.name): f.dataType.simpleString()
-        for t, df in tables.items()
-        for f in df.schema.fields
-    }
-    exp = {(t, c): ty for t, c, ty in expected}
-    exp_tables = {t for t, _, _ in expected}
-    rows = []
-    for t in sorted(exp_tables - set(tables)):
-        rows.append((t, None, "missing_table", None, None))
-    for (t, c), ty in sorted(exp.items()):
-        if t not in tables:
-            continue
-        if (t, c) not in actual:
-            rows.append((t, c, "missing_column", ty, None))
-        elif actual[(t, c)] != ty:
-            rows.append((t, c, "type_mismatch", ty, actual[(t, c)]))
-    for (t, c), ty in sorted(actual.items()):
-        if t in exp_tables and (t, c) not in exp:
-            rows.append((t, c, "unexpected_column", None, ty))
+    specs: dict[str, dict[str, str]] = {}
+    for t, c, ty in expected:
+        specs.setdefault(t, {})[c] = ty
+    found = [
+        (t, c, _STATUS.get(status, status), want, got)
+        for t in specs
+        if t in tables
+        for c, status, want, got in compare_schema(tables[t], specs[t])
+        if status != "ok"
+    ]
+    rows = [(t, None, "missing_table", None, None) for t in sorted(set(specs) - set(tables))]
+    rows += sorted(found, key=lambda r: (r[2] == "unexpected_column", r[0], r[1]))
     return spark.createDataFrame(
         rows,
         "table_name string, column_name string, status string, "

@@ -40,7 +40,6 @@ from data_validator_guard_spark.queries import (  # noqa: E402, F401
     dedup,
     similarity,
     cleaning,
-    multimodal,
     drift,
     temporal,
     pipeline,

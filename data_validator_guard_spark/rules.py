@@ -33,10 +33,10 @@ range_tolerance     |``params["value"]`` - ``params["expected"]``| <=
 derived_equality    ``params["value"]`` == ``params["expected"]`` (rule 14:
                     code derived from source metadata vs stored column,
                     movisensxs_validation.py:55-78)
-unique              no duplicate ``columns`` tuples — one hash aggregation
-                    on the key hash (``params["mode"]="hash"``, default) or
-                    on the full key (``"shuffle"``)
-                    (general_validation.py:19-27, A1; north rule)
+unique              no duplicate ``columns`` tuples — one aggregation on
+                    the xxhash64 of the key, a broadcast semi-join of the
+                    repeated hashes, then an exact count of the candidate
+                    keys (general_validation.py:19-27, A1; north rule)
 unique_normalized   unique over upper(trim(col)) (A2)
 foreign_key         ``columns`` tuples must exist in ``params["dim"]``
                     (general_validation.py:94-108, J4) — broadcast anti-join
@@ -176,13 +176,6 @@ class Rule:
             raise ValueError(
                 f"rule {self.rule_id!r} ({self.type}) requires at least one column"
             )
-        if self.type in ("unique", "unique_normalized"):
-            mode = self.params.get("mode", "hash")
-            if mode not in ("hash", "shuffle"):
-                raise ValueError(
-                    f"rule {self.rule_id!r} ({self.type}) params['mode'] must be "
-                    f"'hash' or 'shuffle', got {mode!r}"
-                )
 
 
 @dataclass(frozen=True)

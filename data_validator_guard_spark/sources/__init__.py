@@ -25,15 +25,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (S6 analog: the
-    reference's sqlite_master catalog scan becomes spark.catalog)."""
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
-
-
 # BOM signatures in sniff order (longest first — UTF-32 LE's BOM starts with
 # UTF-16 LE's two bytes).
 _BOMS = (
@@ -105,17 +96,6 @@ def read_csv(
     if encoding is not None:
         reader = reader.option("encoding", encoding)
     return reader.csv(path)
-
-
-def write_report(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """Violations/verdicts sink (S7 analog). Parquet for the large path;
-    single-file CSV only for small final reports."""
-    if fmt == "parquet":
-        df.write.mode("overwrite").parquet(path)
-    elif fmt == "csv":
-        df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-    else:
-        raise ValueError(f"unknown format {fmt!r}")
 
 
 def read_source(

@@ -110,10 +110,6 @@ def current_snapshot_id(path: str) -> int:
     return _read_meta(path)["current_snapshot_id"]
 
 
-def snapshot_ids(path: str) -> list[int]:
-    return [s["id"] for s in _read_meta(path)["snapshots"]]
-
-
 def read_snapshot(
     spark: SparkSession, path: str, snapshot_id: int | None = None
 ) -> DataFrame:

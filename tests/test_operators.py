@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,16 +109,6 @@ def test_cleaning_rulebook_actions(spark):
     assert got["B2"] == ("y", "rewritten")       # key rewritten, data kept
     assert got["C"] == ("z", "kept")
     assert got["D"][1] == "kept"                 # skip action -> untouched
-
-
-def test_multimodal_stub_matches_hashlib(spark):
-    from data_validator_guard_spark.operators.multimodal import decode_stub
-
-    df = spark.createDataFrame([(1, "hello"), (2, "world!")], "doc_id bigint, text string")
-    out = {r.doc_id: r for r in decode_stub(df, "text", "doc_id").collect()}
-    assert out[1].sha256 == hashlib.sha256(b"hello").hexdigest()
-    assert out[1].n_bytes == 5
-    assert out[2].stub_width == 6 % 640 + 1
 
 
 def test_drift_detects_shifted_distribution(spark):
@@ -371,8 +359,7 @@ def test_drift_repeated_baseline_rows_sum_on_baseline_side(spark):
 
 def test_salted_uniqueness_matches_plain_groupby_under_skew(spark):
     """Skew test (SURVEY.md §5.2): hot key = 30% of rows. duplicate_keys and
-    the engine's unique rule in both modes (hash and shuffle) must equal a
-    plain groupBy."""
+    the engine's unique rule must equal a plain groupBy."""
     from data_validator_guard_spark.engine import validate
     from data_validator_guard_spark.operators.uniqueness import duplicate_keys
     from data_validator_guard_spark.rules import Rule, RuleSuite
@@ -386,13 +373,12 @@ def test_salted_uniqueness_matches_plain_groupby_under_skew(spark):
     }
     assert got == plain and len(got) > 0
     expected = {f"{k}|{v}": n for (k, v), n in plain.items()}
-    for mode in ("hash", "shuffle"):
-        suite = RuleSuite("skew", [Rule("kv", "unique", ("k", "v"), {"mode": mode})])
-        verdicts, violations = validate(df, suite)
-        found = {r["keys"]: r.detail for r in violations.collect()}
-        assert found == {k: f"duplicate key x{n}" for k, n in expected.items()}, mode
-        (v,) = verdicts.collect()
-        assert v.n_violations == sum(expected.values()) and v["pass"] is False, mode
+    suite = RuleSuite("skew", [Rule("kv", "unique", ("k", "v"))])
+    verdicts, violations = validate(df, suite)
+    found = {r["keys"]: r.detail for r in violations.collect()}
+    assert found == {k: f"duplicate key x{n}" for k, n in expected.items()}
+    (v,) = verdicts.collect()
+    assert v.n_violations == sum(expected.values()) and v["pass"] is False
 
 
 def test_language_id_and_quality(spark):
@@ -426,29 +412,6 @@ def test_embedding_near_duplicates_exact_copies(spark):
     assert (1, 2) in got
     assert (1, 3) in got and (2, 3) in got
     assert all(4 not in pair and 5 not in pair for pair in got)
-
-
-def test_multimodal_resize_and_frames(spark):
-    import hashlib
-
-    from data_validator_guard_spark.operators.multimodal import (
-        frame_sample_stub,
-        resize_stub,
-        to_binary_payload,
-    )
-
-    df = spark.createDataFrame([(1, "hello"), (2, "world!")], "doc_id long, text string")
-    pay = to_binary_payload(df, "text", "doc_id")
-
-    resized = {r.doc_id: r for r in resize_stub(pay, 320, 240).collect()}
-    assert resized[1].width == 320 and resized[1].height == 240
-    assert resized[1].resized_sha == hashlib.sha256(b"hello320x240").hexdigest()
-    assert resized[2].n_bytes == 6
-
-    frames = frame_sample_stub(pay, n_frames=3).collect()
-    assert len(frames) == 6
-    by_key = {(r.doc_id, r.frame_idx): r.frame_sha for r in frames}
-    assert by_key[(1, 2)] == hashlib.sha256(b"hello:2").hexdigest()
 
 
 def test_asof_join_semantics(spark):
@@ -1363,6 +1326,17 @@ def test_schema_contract_statuses_and_zero_jobs(spark):
     dup = df.select(F.col("id"), F.col("name").alias("id"))
     with pytest.raises(ValueError, match="duplicate column names"):
         schema_contract(spark, dup, {"id": "bigint"})
+
+
+def test_schema_check_rejects_duplicate_column_names(spark):
+    """A post-join frame with two ``id`` columns raises: keyed by name, the
+    last ``id``'s type would hide a mismatch on the first."""
+    from data_validator_guard_spark.operators.search import schema_check
+
+    df = spark.createDataFrame([(1, "a")], "id long, name string")
+    dup = df.select(F.col("id"), F.col("name").alias("id"))
+    with pytest.raises(ValueError, match="duplicate column names"):
+        schema_check(spark, {"t": dup}, [("t", "id", "string")])
 
 
 def test_cms_merge_equals_full_build_and_never_undercounts(spark):

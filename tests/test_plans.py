@@ -87,11 +87,8 @@ def test_unique_hash_mode_shuffles_hashes_not_strings(spark, docs):
     # the exchange must carry the 64-bit hash column, not raw text
     assert "xxhash64" in s
     # one exchange for the hash count, one for the exact count of the
-    # candidate keys; shuffle mode counts the full keys in one exchange
+    # candidate keys
     assert plans.shuffle_exchange_count(violations) == 2
-    shuffle = RuleSuite("p", [Rule("u", "unique", ("text", "source"), {"mode": "shuffle"})])
-    _, violations = validate(docs, shuffle)
-    assert plans.shuffle_exchange_count(violations) == 1
 
 
 def test_verdicts_single_totals_execution(spark, docs):

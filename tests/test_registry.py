@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import json
 import re
+from pathlib import Path
 
 import pytest
 
@@ -39,10 +41,19 @@ def test_registry_covers_operator_families():
         "dedup_exact", "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
         "similarity_topk", "similarity_bucketed",
         "token_counts", "quality_features", "language_id", "fingerprints",
-        "multimodal_decode_stub", "drift_psi",
+        "drift_psi",
     }
     missing = required - names
     assert not missing, f"registry missing: {sorted(missing)}"
+
+
+def test_gated_queries_stay_registered_with_oracles():
+    """A query may leave the registry only if it is not one of the 50 that
+    ``CORRECTNESS_r05.json`` gates; each of those keeps its oracle."""
+    gated = json.loads((Path(__file__).parents[1] / "CORRECTNESS_r05.json").read_text())
+    assert len(gated) == 50
+    assert not set(gated) - set(QUERIES), "gated query unregistered"
+    assert not set(gated) - set(ORACLES), "gated query has no oracle"
 
 
 def test_oracles_are_duckdb_safe():
