@@ -286,7 +286,9 @@ def _unique_fragment(rule: Rule, part: Column) -> Fragment:
 
 
 def _foreign_key_violations(df: DataFrame, rule: Rule, part: Column, keys: Column) -> DataFrame:
-    """Broadcast left-anti referential check (`general_validation.py:94-108`)."""
+    """Broadcast left-anti referential check (`general_validation.py:94-108`)
+    over the rows ``params["where"]`` selects, as on the inline path."""
+    df = df.filter(_guard(rule, F.lit(True)))
     dim: DataFrame = rule.params["dim"]
     dim_cols = list(rule.params.get("dim_columns", rule.columns))
     sel = df.select(

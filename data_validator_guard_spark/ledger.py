@@ -18,8 +18,9 @@ This replaces the reference's clone-whole-DB-then-mutate safety pattern
   pushes down to the scan, so finished partitions are pruned at the source
   (partition pruning on a partitioned Iceberg/parquet table).
 
-The ledger itself is a small append-only parquet table; latest entry per
-(partition, snapshot_id, rule_version) wins.
+The ledger itself is a small append-only parquet table of ``status = 'done'``
+rows; a partition is done for a (snapshot_id, rule_version) once any row
+records it.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_validator_guard_spark.engine import validate
@@ -35,34 +36,21 @@ from data_validator_guard_spark.functions import partition_value
 from data_validator_guard_spark.rules import RuleSuite
 from data_validator_guard_spark.session import track_persist, unpersist_intermediates
 
-LEDGER_SCHEMA = (
-    "partition string, snapshot_id string, rule_version string, "
-    "rows_scanned bigint, rows_failed bigint, status string, ts double"
-)
-
-
-def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
-    if not os.path.exists(ledger_path):
-        return spark.createDataFrame([], LEDGER_SCHEMA)
-    raw = spark.read.parquet(ledger_path)
-    w = Window.partitionBy("partition", "snapshot_id", "rule_version").orderBy(
-        F.col("ts").desc()
-    )
-    return raw.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
-
-
 def done_partitions(
     spark: SparkSession, ledger_path: str, snapshot_id: str, rule_version: str
 ) -> list[str]:
-    led = read_ledger(spark, ledger_path)
+    """Partitions the ledger records as done for ``snapshot_id`` under
+    ``rule_version`` (``[]`` when no ledger exists yet). Every ledger row is
+    a ``status = 'done'`` commit point, so one row for the triple is enough:
+    no latest-entry window is needed."""
+    if not os.path.exists(ledger_path):
+        return []
     return [
         r.partition
-        for r in led.filter(
-            (F.col("snapshot_id") == snapshot_id)
-            & (F.col("rule_version") == rule_version)
-            & (F.col("status") == "done")
-        )
+        for r in spark.read.parquet(ledger_path)
+        .filter((F.col("snapshot_id") == snapshot_id) & (F.col("rule_version") == rule_version))
         .select("partition")
+        .distinct()
         .collect()
     ]
 

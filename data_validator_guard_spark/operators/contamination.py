@@ -2,12 +2,15 @@
 training pipeline runs before shipping a split (no reference ancestor; the
 LLM-data extension of the dedup family, same shingle machinery).
 
-Two strengths:
+Three strengths:
 - **exact**: eval documents whose normalized fingerprint also appears in the
   train split (verbatim leakage);
 - **n-gram**: eval documents sharing any word n-gram (the GPT-3 paper used
   13-grams) with any train document — catches paraphrase-adjacent leakage
-  and quoted snippets.
+  and quoted snippets;
+- **fuzzy**: eval documents near-duplicating a train document at exact
+  Jaccard >= threshold, mined by the dedup module's two-sided MinHash miner
+  (eval x train band collisions only).
 
 Scale shape: the join key is the fingerprint / shingle, so the shuffle is
 partitioned by content, never all-pairs; the n-gram path reuses
@@ -21,7 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_validator_guard_spark.operators.dedup import shingle_table
+from data_validator_guard_spark.operators.dedup import (
+    DEFAULT_MAX_BUCKET,
+    _minhash_probe_pairs,
+    minhash_signature,
+    shingle_table,
+)
 from data_validator_guard_spark.operators.text import normalize_text
 from data_validator_guard_spark.session import track_persist
 
@@ -86,7 +94,7 @@ def fuzzy_contamination(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.7,
-    max_bucket: int | None = None,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Eval documents NEAR-duplicating any train document (the fuzzy third
     strength, between ``exact_contamination`` and raw n-gram overlap):
@@ -95,61 +103,22 @@ def fuzzy_contamination(
     training pipelines run so a lightly-edited eval document (reformatted,
     suffixed, translated boilerplate) cannot hide from the verbatim check.
 
-    Cross-corpus LSH, reusing the dedup machinery end to end: sign both
-    sides (k MinHashes over word n-gram shingles), band, cap degenerate
-    buckets over the COMBINED band population (same semantics as
-    ``incremental_near_duplicates``), and generate candidates from
-    eval-band x train-band collisions ONLY — train x train and eval x eval
-    pairs are never formed, so candidate work is proportional to genuine
-    cross-corpus collisions, not either corpus squared. Verification is
-    exact Jaccard over shingles semi-joined down to candidate ids before
-    the intersection join. Contract (as for the incremental miner): ids
-    must be disjoint across the two sides.
+    Cross-corpus LSH through dedup's two-sided MinHash miner (the one
+    ``incremental_near_duplicates`` runs): sign both sides (k MinHashes over
+    word n-gram shingles), band, cap degenerate buckets over the COMBINED
+    band population, and keep eval-band x train-band collisions ONLY — the
+    pair predicate is pushed into each join side, so train x train and
+    eval x eval pairs are never formed and candidate work is proportional to
+    genuine cross-corpus collisions, not either corpus squared. Verification
+    is exact Jaccard over shingles semi-joined down to candidate ids before
+    the intersection join. ``max_bucket=None`` turns the cap off, as in every
+    near-dup operator. Contract (as for the incremental miner): ids must be
+    disjoint across the two sides.
     """
-    from data_validator_guard_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET,
-        _band_table,
-        _cap_buckets,
-        jaccard_verify,
-        minhash_signature,
-    )
-
-    if max_bucket is None:
-        max_bucket = DEFAULT_MAX_BUCKET
     t_sig = track_persist(minhash_signature(train, text_col, id_col, k, n))
-    e_sig = track_persist(minhash_signature(eval_df, text_col, id_col, k, n))
-    banded = (
-        _band_table(e_sig, k, bands)
-        .withColumn("is_eval", F.lit(True))
-        .unionByName(_band_table(t_sig, k, bands).withColumn("is_eval", F.lit(False)))
+    keep = F.col("a.__probe") & ~F.col("b.__probe")  # eval (probe) x train only
+    pairs = _minhash_probe_pairs(
+        eval_df, t_sig, shingle_table(train, text_col, id_col, n), text_col, id_col,
+        k, bands, n, threshold, max_bucket, keep,
     )
-    banded = track_persist(_cap_buckets(banded, ["band", "val"], max_bucket))
-    e = banded.filter(F.col("is_eval")).alias("e")
-    t = banded.filter(~F.col("is_eval")).alias("t")
-    pairs = (
-        e.join(
-            t,
-            (F.col("e.band") == F.col("t.band")) & (F.col("e.val") == F.col("t.val")),
-        )
-        .select(F.col("e.id").alias("id1"), F.col("t.id").alias("id2"))
-        .distinct()
-    )
-    pairs = track_persist(pairs)
-    cand_ids = (
-        pairs.select(F.col("id1").alias("id"))
-        .unionByName(pairs.select(F.col("id2").alias("id")))
-        .distinct()
-    )
-    # jaccard_verify reads the shingle frame from several subplans (sizes,
-    # both join sides); persist the candidate-pruned frame once or each
-    # reference re-explodes BOTH corpora into n-grams (the minhash_near_
-    # duplicates persist rationale — verified by plan audit: 248 static
-    # scans without this persist, 10 with).
-    shingles = track_persist(
-        shingle_table(eval_df, text_col, id_col, n)
-        .unionByName(shingle_table(train, text_col, id_col, n))
-        .join(cand_ids, "id", "left_semi")
-    )
-    return jaccard_verify(pairs, shingles, threshold).select(
-        F.col("id1").alias("eval_id"), F.col("id2").alias("train_id"), "jaccard"
-    )
+    return pairs.select(F.col("id1").alias("eval_id"), F.col("id2").alias("train_id"), "jaccard")

@@ -1,4 +1,5 @@
-"""Deduplication operators: exact, MinHash+LSH, n-gram Jaccard, SimHash.
+"""Deduplication operators: exact, MinHash+LSH, n-gram Jaccard, SimHash,
+embedding cosine, clusters and survivorship, repo and code-clone containment.
 
 Scale design:
 - **exact**: fingerprint (md5 of normalized text) → salted two-phase count →
@@ -13,6 +14,22 @@ Scale design:
 - **SimHash**: 64-bit signature from seeded md5 nibbles; banded 16-bit
   sub-signatures propose candidates, exact Hamming verifies. Fully
   expression-level.
+- **embedding cosine**: integer sign-bucket LSH proposes, an exact integer
+  cosine test verifies (shared with ``similarity.semantic_near_duplicates``).
+
+Pair generation: every near-dup operator here, and the semantic, fuzzy
+contamination and streaming-store operators built on this module, form
+their candidates with :func:`bucket_pairs` — drop buckets over
+``max_bucket`` rows, then one within-bucket self-join under a pair
+predicate. ``max_bucket=None`` turns the cap off in every operator; the
+default is ``DEFAULT_MAX_BUCKET``. The containment core behind
+``repo_containment`` and ``code_clone_pairs`` keeps its own hash join: its
+hot-hash cap is a window count whose hash partitioning the join reuses,
+which times faster there than the count and semi-join of
+:func:`bucket_pairs`. The two-sided MinHash miner (a new batch
+against a stored corpus, eval against train) is one function,
+``_minhash_probe_pairs``; its two operators differ only in which colliding
+pairs they keep.
 
 Caching: the near-dup operators persist reused intermediates (signatures,
 shingles, capped frames) because each feeds several subplans, through
@@ -72,6 +89,40 @@ def _cap_buckets(
     return df.join(sizes, bucket_cols, "left_semi")
 
 
+def bucket_pairs(
+    df: DataFrame,
+    bucket_cols: list[str],
+    max_bucket: int | None,
+    keep: Column | None = None,
+    *,
+    persist: bool = False,
+) -> DataFrame:
+    """The near-dup family's one pair generator: drop over-full buckets
+    (``_cap_buckets``), then self-join the rows that share every
+    ``bucket_cols`` value, under the pair predicate ``keep`` (default
+    ``a.id < b.id``: each unordered pair once, no self-pairs). The two sides
+    are aliased ``a`` and ``b``; callers select ``a.<col>`` / ``b.<col>``.
+
+    ``persist=True`` caches the capped frame (``track_persist``) for callers
+    whose rows are costly to recompute; the release contract is the
+    caller's, as for its other persisted intermediates.
+    """
+    capped = _cap_buckets(df, bucket_cols, max_bucket)
+    if persist:
+        capped = track_persist(capped)
+    a, b = capped.alias("a"), capped.alias("b")
+    cond = F.col("a.id") < F.col("b.id") if keep is None else keep
+    for c in bucket_cols:
+        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    return a.join(b, cond)
+
+
+def _id_pairs(joined: DataFrame) -> DataFrame:
+    """Distinct ``id1, id2`` of a :func:`bucket_pairs` join (a pair sharing
+    several buckets is emitted once)."""
+    return joined.select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2")).distinct()
+
+
 # ------------------------------------------------------------------ exact
 def exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact near-identity dedup: ``fp, keep_id, n_copies`` per fingerprint
@@ -119,19 +170,22 @@ def minhash_signature(
     return sh.groupBy("id").agg(*aggs)
 
 
-def _band_table(sig: DataFrame, k: int, bands: int) -> DataFrame:
-    """Exploded banded signatures: ``id, band, val`` (val = '#'-joined rows)."""
+def _band_table(sig: DataFrame, band_vals: list[Column], *carry: str) -> DataFrame:
+    """Exploded bands: ``id, *carry, band, val``, one row per input row and
+    band ``b``, with ``val = band_vals[b]`` evaluated over ``sig``."""
+    bv = F.array(
+        *[F.struct(F.lit(b).alias("band"), v.alias("val")) for b, v in enumerate(band_vals)]
+    )
+    return sig.select("id", *carry, F.explode(bv).alias("bv")).select("id", *carry, "bv.*")
+
+
+def _minhash_bands(k: int, bands: int) -> list[Column]:
+    """MinHash band values: band b = its ``k // bands`` rows' minhashes,
+    '#'-joined."""
     r = k // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws("#", *[F.col(f"mh{b * r + j}") for j in range(r)]).alias("val"),
-        )
-        for b in range(bands)
+    return [
+        F.concat_ws("#", *[F.col(f"mh{b * r + j}") for j in range(r)]) for b in range(bands)
     ]
-    return sig.select(
-        F.col("id"), F.explode(F.array(*band_structs)).alias("bv")
-    ).select("id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
 
 
 def lsh_candidate_pairs(
@@ -144,19 +198,8 @@ def lsh_candidate_pairs(
     ``max_bucket`` (e.g. every empty-shingle document sharing one degenerate
     band value) are dropped by a count pre-pass — see ``_cap_buckets``.
     """
-    exploded = _cap_buckets(_band_table(sig, k, bands), ["band", "val"], max_bucket)
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
-    )
+    banded = _band_table(sig, _minhash_bands(k, bands))
+    return _id_pairs(bucket_pairs(banded, ["band", "val"], max_bucket))
 
 
 def jaccard_verify(
@@ -268,38 +311,59 @@ def incremental_near_duplicates(
     (validation_flow.py); incremental mining is this engine's scale
     extension of its duplicate checks (general_validation.py:19-27).
     """
-    new_sig = track_persist(minhash_signature(new_df, text_col, id_col, k, n))
-    new_sh = track_persist(shingle_table(new_df, text_col, id_col, n))
-    banded = (
-        _band_table(new_sig, k, bands)
-        .withColumn("is_new", F.lit(True))
-        .unionByName(_band_table(corpus_sig, k, bands).withColumn("is_new", F.lit(False)))
+    keep = (F.col("a.id") < F.col("b.id")) & (F.col("a.__probe") | F.col("b.__probe"))
+    return _minhash_probe_pairs(
+        new_df, corpus_sig, corpus_shingles, text_col, id_col, k, bands, n, threshold,
+        max_bucket, keep,
     )
-    banded = track_persist(_cap_buckets(banded, ["band", "val"], max_bucket))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.id") < F.col("b.id"))
-            & (F.col("a.is_new") | F.col("b.is_new")),
-        )
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
+
+
+def _minhash_probe_pairs(
+    probe: DataFrame,
+    base_sig: DataFrame,
+    base_shingles: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    bands: int,
+    n: int,
+    threshold: float,
+    max_bucket: int | None,
+    keep: Column,
+) -> DataFrame:
+    """The two-sided MinHash miner behind ``incremental_near_duplicates``
+    and ``contamination.fuzzy_contamination``: ``id1, id2, jaccard``.
+
+    ``probe`` is signed and shingled here; the base side arrives signed
+    (``base_sig``, ``base_shingles``, e.g. from ``build_signature_store``).
+    Both sides are banded alike and tagged (``__probe`` true on the probe
+    side), the cap counts the COMBINED band population, and ``keep`` (over
+    the ``a``/``b`` sides of :func:`bucket_pairs`) picks which colliding
+    pairs become candidates. Verify only reads the shingles of candidate
+    ids: both shingle frames are semi-joined down to them BEFORE the
+    intersection join (persisted, since ``jaccard_verify`` reads the frame
+    from several subplans), so verify never shuffles a whole corpus. Ids
+    must be disjoint across the two sides.
+    """
+    probe_sig = track_persist(minhash_signature(probe, text_col, id_col, k, n))
+    vals = _minhash_bands(k, bands)
+    banded = _band_table(probe_sig.withColumn("__probe", F.lit(True)), vals, "__probe")
+    banded = banded.unionByName(
+        _band_table(base_sig.withColumn("__probe", F.lit(False)), vals, "__probe")
     )
-    pairs = track_persist(pairs)
-    # Verify only needs shingles of candidate ids: semi-join the store down
-    # BEFORE the intersection join, so verify never shuffles the whole
-    # corpus shingle store per batch (store bucketed by id makes this a
-    # local filter in production).
+    pairs = track_persist(
+        _id_pairs(bucket_pairs(banded, ["band", "val"], max_bucket, keep, persist=True))
+    )
     cand_ids = (
         pairs.select(F.col("id1").alias("id"))
         .unionByName(pairs.select(F.col("id2").alias("id")))
         .distinct()
     )
-    shingles = corpus_shingles.unionByName(new_sh).join(cand_ids, "id", "left_semi")
+    shingles = track_persist(
+        shingle_table(probe, text_col, id_col, n)
+        .unionByName(base_shingles)
+        .join(cand_ids, "id", "left_semi")
+    )
     return jaccard_verify(pairs, shingles, threshold)
 
 
@@ -324,13 +388,7 @@ def ngram_jaccard_duplicates(
         F.floor(F.length(F.col(text_col)) / length_bucket).alias("__lb"),
         word_shingles(F.col(text_col), n).alias("__sh"),
     )
-    base = track_persist(_cap_buckets(base, [*block_cols, "__lb"], max_bucket))
-    a = base.alias("a")
-    b = base.alias("b")
-    cond = (F.col("a.id") < F.col("b.id")) & (F.col("a.__lb") == F.col("b.__lb"))
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    pairs = a.join(b, cond).select(
+    pairs = bucket_pairs(base, [*block_cols, "__lb"], max_bucket, persist=True).select(
         F.col("a.id").alias("id1"),
         F.col("b.id").alias("id2"),
         F.size(F.array_intersect(F.col("a.__sh"), F.col("b.__sh"))).alias("n_inter"),
@@ -427,25 +485,9 @@ def simhash_near_duplicates(
     """
     sig = track_persist(simhash64(df, text_col, id_col))
     width = SIMHASH64_BITS // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.substring(F.col("simhash"), b * width + 1, width).alias("val"),
-        )
-        for b in range(bands)
-    ]
-    exploded = sig.select(
-        "id", "simhash", F.explode(F.array(*band_structs)).alias("bv")
-    ).select("id", "simhash", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
-    exploded = _cap_buckets(exploded, ["band", "val"], max_bucket)
-    a, b = exploded.alias("a"), exploded.alias("b")
+    vals = [F.substring(F.col("simhash"), b * width + 1, width) for b in range(bands)]
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        bucket_pairs(_band_table(sig, vals, "simhash"), ["band", "val"], max_bucket)
         .select(
             F.col("a.id").alias("id1"),
             F.col("b.id").alias("id2"),
@@ -476,10 +518,9 @@ def _int_dot(a: Column, b: Column) -> Column:
 
 def _int_lsh_bits(qv: Column, n_planes: int) -> Column:
     """Sign-bucket id over *integer* projections: plane component for
-    (dim d, plane p) is ((d*31 + p*17) % 7) - 3 (pure arithmetic, same family
-    as operators.similarity.lsh_bucket) — with quantized vectors the
-    projection is an exact integer, so the bucket is engine-portable with no
-    float-sign edge cases."""
+    (dim d, plane p) is ((d*31 + p*17) % 7) - 3 (pure arithmetic, no RNG
+    state) — with quantized vectors the projection is an exact integer, so
+    the bucket is engine-portable with no float-sign edge cases."""
     dim_idx = F.sequence(F.lit(1), F.size(qv))
 
     def _term(p: int):
@@ -585,18 +626,32 @@ def embedding_near_duplicates(
     base = df.select(
         F.col(id_col).alias("id"), _quantize(F.col(vec_col), scale).alias("__q")
     )
-    keyed = base.select(
-        "id",
-        "__q",
-        _int_lsh_bits(F.col("__q"), n_planes).alias("__bucket"),
-        checked_norm2(F.col("__q"), "embedding_near_duplicates").alias("__n2"),
+    keyed = base.withColumn("__bucket", _int_lsh_bits(F.col("__q"), n_planes))
+    return _exact_cosine_pairs(
+        keyed, "__bucket", max_bucket, threshold_cents, "embedding_near_duplicates",
+        persist=True,
     )
-    keyed = track_persist(_cap_buckets(keyed, ["__bucket"], max_bucket))
-    a, b = keyed.alias("a"), keyed.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.__bucket") == F.col("b.__bucket")) & (F.col("a.id") < F.col("b.id")),
-    ).select(
+
+
+def _exact_cosine_pairs(
+    keyed: DataFrame,
+    bucket_col: str,
+    max_bucket: int | None,
+    threshold_cents: int,
+    op_name: str,
+    *,
+    persist: bool = False,
+) -> DataFrame:
+    """Within-bucket exact-cosine verify shared by
+    ``embedding_near_duplicates`` (LSH bucket) and
+    ``similarity.semantic_near_duplicates`` (IVF cell): ``id1, id2`` over
+    ``keyed`` = ``id, __q`` (quantized vector) plus ``bucket_col``, keeping
+    pairs in one bucket with cos >= threshold_cents/100. |v|² carries the
+    ``checked_norm2`` overflow guard (its message names ``op_name``); the
+    decision is :func:`exact_cos_ge`, so no float touches it. ``persist``
+    passes through to :func:`bucket_pairs`."""
+    keyed = keyed.withColumn("__n2", checked_norm2(F.col("__q"), op_name))
+    pairs = bucket_pairs(keyed, [bucket_col], max_bucket, persist=persist).select(
         F.col("a.id").alias("id1"),
         F.col("b.id").alias("id2"),
         _int_dot(F.col("a.__q"), F.col("b.__q")).alias("__dot"),

@@ -1,13 +1,20 @@
-"""Embedding similarity search: brute-force cosine top-k + LSH-bucketed ANN.
+"""Embedding similarity search: brute-force cosine top-k, LSH-bucketed and
+IVF ANN, and SemDeDup-style semantic near-duplicates.
 
 - **brute force** (the correctness baseline): broadcast the (small) query set
   against the corpus; cosine via ``zip_with`` + ``aggregate`` — sequential
   left-fold per row, JVM-side, deterministic summation order.
 - **bucketed ANN** (the scale path): deterministic sign-bucket LSH — each
-  vector hashed to a bucket by the signs of its dot products with fixed
-  pseudo-random hyperplanes (derived arithmetically from (dim, plane) indices,
-  no RNG state); search touches only the query's bucket. Recall < 1 by
-  design; the bucket fn is engine-portable so results are reproducible.
+  integer-quantized vector hashed to a bucket by the signs of its exact
+  int64 dot products with fixed pseudo-random hyperplanes (derived
+  arithmetically from (dim, plane) indices, no RNG state); search touches
+  only the query's bucket(s). Recall < 1 by design; the bucket fn
+  (:func:`quantized_lsh_bucket`) is engine-portable so results are
+  reproducible.
+- **IVF ANN**: integer k-means cells; a query searches its nprobe nearest.
+- **semantic near-duplicates**: IVF cells propose, and the dedup module's
+  within-bucket exact-cosine verify (shared with
+  ``dedup.embedding_near_duplicates``) disposes.
 
 At 10^12 scale the corpus side stays partitioned; only queries broadcast.
 Top-k uses a window over (similarity DESC, id ASC) — total order, no float
@@ -109,35 +116,11 @@ def brute_force_topk(
     )
 
 
-def _plane_component(d: Column, p: int) -> Column:
-    """Deterministic pseudo-random hyperplane component for (dim d, plane p):
-    ((d*31 + p*17) % 7) - 3 ∈ [-3, 3]. Pure arithmetic — portable."""
-    return ((d * 31 + F.lit(p * 17)) % 7 - 3).cast("double")
-
-
-def lsh_bucket(vec: Column, n_planes: int = 4) -> Column:
-    """Sign-bucket id: concat of sign bits of <vec, plane_p> for p in 0..n-1."""
-    dim_idx = F.sequence(F.lit(1), F.size(vec))
-
-    def _term(p: int):
-        return lambda x, d: x.cast("double") * _plane_component(d, p)
-
-    bits = []
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(vec, dim_idx, _term(p)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def quantized_lsh_bucket(vec: Column, n_planes: int = 4, scale: int = 1000) -> Column:
-    """Sign-bucket id over integer-quantized vectors — same plane family as
-    ``lsh_bucket`` but the projection is exact int64 arithmetic (no float
-    summation-order sign flips near 0), so the bucket decision is
-    engine-portable and SQL-oracle-replicable bit for bit."""
+    """Sign-bucket id over integer-quantized vectors: the projection onto
+    each plane is exact int64 arithmetic (no float summation-order sign
+    flips near 0), so the bucket decision is engine-portable and
+    SQL-oracle-replicable bit for bit."""
     from data_validator_guard_spark.operators.dedup import _int_lsh_bits, _quantize
 
     return _int_lsh_bits(_quantize(vec, scale), n_planes)
@@ -597,8 +580,9 @@ def semantic_near_duplicates(
     regions, so near-duplicate recall per comparison is far higher than the
     random-hyperplane LSH buckets of ``dedup.embedding_near_duplicates`` —
     hyperplane signs split dense regions arbitrarily; centroids chase them.
-    Verification is the shared exact-integer cosine kit (``checked_norm2``
-    overflow guard + ``exact_cos_ge`` decimal(38,0) comparison), so no float
+    Verification is dedup's within-bucket exact-cosine verify, shared with
+    ``embedding_near_duplicates`` (``checked_norm2`` overflow guard +
+    ``exact_cos_ge`` decimal(38,0) comparison), so no float
     touches any decision and a SQL oracle reproduces the output bit for bit.
     Identical vectors always share a cell (same exact L2 distances, same
     centroid-id tiebreak), so exact duplicates have recall 1; near-dup pairs
@@ -609,42 +593,18 @@ def semantic_near_duplicates(
     all reuse it), centroids broadcast (k rows), the quadratic verify runs
     only within cells — the shuffle key is centroid_id. For corpora where
     cells outgrow executors, raise n_clusters (cells shrink ~linearly) and
-    cap degenerate cells with ``max_cell`` (recall-only loss, same contract
-    as dedup's ``_cap_buckets``); survivors come from composing the output
-    with ``dedup.connected_components`` + ``dedup.apply_survivorship``.
+    cap degenerate cells with ``max_cell`` (recall-only loss, the
+    ``max_bucket`` contract of dedup's ``bucket_pairs``); survivors come
+    from composing the output with ``dedup.connected_components`` +
+    ``dedup.apply_survivorship``.
     """
-    from data_validator_guard_spark.operators.dedup import (
-        _cap_buckets,
-        _int_dot,
-        checked_norm2,
-        exact_cos_ge,
-    )
+    from data_validator_guard_spark.operators.dedup import _exact_cosine_pairs
 
     q = _quantized_frame(corpus, vec_col, id_col, scale)
     cents = ivf_centroids(corpus, vec_col, id_col, n_clusters, iters, scale, _q=q)
-    assigned = _assign_to_centroids(q, cents)
-    cells = (
-        q.join(assigned, "id")
-        .select(
-            "id",
-            "__qv",
-            "centroid_id",
-            checked_norm2(F.col("__qv"), "semantic_near_duplicates").alias("__n2"),
-        )
+    cells = q.join(_assign_to_centroids(q, cents), "id").select(
+        "id", F.col("__qv").alias("__q"), "centroid_id"
     )
-    cells = _cap_buckets(cells, ["centroid_id"], max_cell)
-    a, b = cells.alias("a"), cells.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.centroid_id") == F.col("b.centroid_id"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(
-        F.col("a.id").alias("id1"),
-        F.col("b.id").alias("id2"),
-        _int_dot(F.col("a.__qv"), F.col("b.__qv")).alias("__dot"),
-        F.col("a.__n2").alias("__na2"),
-        F.col("b.__n2").alias("__nb2"),
+    return _exact_cosine_pairs(
+        cells, "centroid_id", max_cell, threshold_cents, "semantic_near_duplicates"
     )
-    return pairs.filter(
-        exact_cos_ge(F.col("__dot"), F.col("__na2"), F.col("__nb2"), threshold_cents)
-    ).select("id1", "id2")

@@ -682,7 +682,8 @@ def q_split_contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact Jaccard >= 0.7 via cross-corpus LSH (eval-band x train-band
     candidates only — neither corpus is ever self-joined). Must find both
     the verbatim plants (jaccard 1.0) and the suffix-perturbed ones the
-    exact check misses."""
+    exact check misses. Uncapped (``max_bucket=None``), as the oracle
+    replays the pipeline with no bucket cap."""
     from data_validator_guard_spark.operators.contamination import fuzzy_contamination
 
     train, eval_docs = _spark_contam_frames(spark, sf_dir)
@@ -692,5 +693,6 @@ def q_split_contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     eval_fuzzy = eval_docs.unionByName(perturbed)
     return fuzzy_contamination(
-        train, eval_fuzzy, "text", "doc_id", k=8, bands=4, n=3, threshold=0.7
+        train, eval_fuzzy, "text", "doc_id", k=8, bands=4, n=3, threshold=0.7,
+        max_bucket=None,
     )

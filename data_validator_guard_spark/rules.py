@@ -60,11 +60,16 @@ drift               distribution drift vs a baseline histogram (PSI /
                     chi-square), the engine's one pandas UDF (§2.10)
 ==================  =========================================================
 
-Every ROW-level rule additionally accepts ``params["where"]`` — a boolean SQL
-expression restricting the check to matching rows ("if status='active' then
-email not null"). The guard fuses into the same scan; non-applicable rows are
-never violations. The reference expresses this with hard-coded pre-filters
-(the clinician exclusion, `auxiliar_functions.py:47-52`).
+Every ROW-level rule and ``foreign_key`` additionally accept
+``params["where"]`` — a boolean SQL expression restricting the check to
+matching rows ("if status='active' then email not null"). For row rules and
+the inline foreign key the guard fuses into the same scan; the broadcast
+foreign key filters its anti-join input by it, so both FK plans check the
+same rows. Non-applicable rows are never violations. Every other type's plan
+would ignore the guard, so a rule of that type with ``where`` set is
+rejected at definition time (``ValueError``). The reference expresses this
+with hard-coded pre-filters (the clinician exclusion,
+`auxiliar_functions.py:47-52`).
 
 Every rule also accepts ``params["depends_on"]`` — a sequence of rule_ids in
 the same suite. Per PARTITION, if any (transitively) depended-on rule failed,
@@ -113,6 +118,8 @@ PLAN_LEVEL_TYPES = frozenset(
     }
 )
 ALL_TYPES = ROW_LEVEL_TYPES | AGG_LEVEL_TYPES | PLAN_LEVEL_TYPES
+# Types whose plans read ``params["where"]``.
+WHERE_TYPES = ROW_LEVEL_TYPES | {"foreign_key"}
 
 # Required params per rule type — validated at Rule construction so a
 # misconfigured rulebook fails at DEFINITION time with a named message, not
@@ -175,6 +182,11 @@ class Rule:
         if self.type in _NEEDS_COLUMNS and not self.columns:
             raise ValueError(
                 f"rule {self.rule_id!r} ({self.type}) requires at least one column"
+            )
+        if self.params.get("where") is not None and self.type not in WHERE_TYPES:
+            raise ValueError(
+                f"rule {self.rule_id!r} ({self.type}) does not support params['where']; "
+                "only row-level rules and foreign_key do"
             )
 
 

@@ -19,6 +19,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from data_validator_guard_spark.engine import validate
+from data_validator_guard_spark.operators.dedup import (
+    DEFAULT_MAX_BUCKET,
+    jaccard_verify,
+    lsh_candidate_pairs,
+    minhash_signature,
+    shingle_table,
+)
 from data_validator_guard_spark.rules import RuleSuite
 from data_validator_guard_spark.session import unpersist_intermediates
 
@@ -189,11 +196,6 @@ def minhash_signature_stream(
     both stores grow linearly with the corpus (k hashes / distinct shingles
     per doc) and stay partitioned — nothing is driver-side.
     """
-    from data_validator_guard_spark.operators.dedup import (
-        minhash_signature,
-        shingle_table,
-    )
-
     stream = spark.readStream.schema(schema).parquet(input_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -220,7 +222,7 @@ def near_duplicates_from_store(
     k: int = 8,
     bands: int = 4,
     threshold: float = 0.7,
-    max_bucket: int | None = None,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Streaming near-dup bridge, pairing side: banded LSH + exact-Jaccard
     verification over the ACCUMULATED signature store — the periodic batch
@@ -230,16 +232,9 @@ def near_duplicates_from_store(
     near-duplicate from drain 2). Signatures/shingles are deterministic per
     document, so if an id was ever double-emitted the duplicates are
     identical rows — collapsed here (dropDuplicates on full rows) before
-    pairing. ``max_bucket`` defaults to the dedup module's cap when None.
+    pairing. ``max_bucket`` is the dedup module's per-bucket cap
+    (``None`` turns it off, as in every near-dup operator).
     """
-    from data_validator_guard_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET,
-        jaccard_verify,
-        lsh_candidate_pairs,
-    )
-
-    if max_bucket is None:
-        max_bucket = DEFAULT_MAX_BUCKET
     sig = (
         spark.read.parquet(os.path.join(store_dir, "signatures"))
         .drop("batch_id")

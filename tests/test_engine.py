@@ -398,6 +398,89 @@ def test_conditional_rule_where_guard(spark):
     assert [r.keys for r in violations.collect()] == ["1"]
 
 
+def test_two_column_foreign_key_where_flags_only_guarded_rows(spark):
+    """The broadcast anti-join plan applies ``where`` like every row rule:
+    unknown pairs outside the guard are not violations."""
+    df = spark.createDataFrame(
+        [
+            (1, "active", "en", "US"),    # guarded + unknown pair -> violation
+            (2, "active", "de", "DE"),    # guarded + known pair
+            (3, "inactive", "xx", "ZZ"),  # guard false -> not a violation
+            (4, None, "yy", "YY"),        # guard NULL -> not a violation
+        ],
+        "id bigint, status string, lang string, country string",
+    )
+    dim = spark.createDataFrame([("de", "DE"), ("en", "GB")], "lang string, country string")
+    suite = RuleSuite(
+        "p",
+        [
+            Rule(
+                "pair_fk",
+                "foreign_key",
+                ("lang", "country"),
+                {"dim": dim, "where": "status = 'active'"},
+            )
+        ],
+        key_cols=("id",),
+    )
+    verdicts, violations = validate(df, suite)
+    v = verdicts.collect()[0]
+    assert (v.n_rows, v.n_violations, v["pass"]) == (4, 1, False)
+    assert [r.keys for r in violations.collect()] == ["1"]
+
+
+def test_foreign_key_where_same_on_inline_and_broadcast_plans(spark):
+    """One ``where`` means one row set: the inline ``isin`` row rule and the
+    broadcast anti-join give the same verdicts and violation rows."""
+    df = spark.createDataFrame(
+        [
+            (1, "a", "en"),
+            (2, "a", "xx"),   # guarded, unknown -> violation
+            (3, "a", None),   # guarded, NULL -> violation
+            (4, "b", "yy"),   # guard false
+            (5, None, "zz"),  # guard NULL
+        ],
+        "id bigint, grp string, lang string",
+    )
+    dim = spark.createDataFrame([("en",), ("de",)], "lang string")
+
+    def run(inline):
+        suite = RuleSuite(
+            "p",
+            [
+                Rule(
+                    "fk",
+                    "foreign_key",
+                    ("lang",),
+                    {"dim": dim, "inline": inline, "where": "grp = 'a'"},
+                )
+            ],
+            key_cols=("id",),
+        )
+        verdicts, violations = validate(df, suite)
+        v = verdicts.select("rule_id", "pass", "n_rows", "n_violations")
+        return (
+            [tuple(r) for r in v.collect()],
+            sorted(tuple(r) for r in violations.select("keys", "detail").collect()),
+        )
+
+    inline, broadcast = run(True), run(False)
+    assert inline == broadcast
+    assert inline[0] == [("fk", False, 5, 2)]
+    assert [k for k, _ in inline[1]] == ["2", "3"]
+
+
+def test_where_on_a_type_that_ignores_it_fails_at_definition(spark):
+    """A guard the plan would silently ignore is a misconfiguration: it
+    raises when the rule is defined, naming the rule."""
+    with pytest.raises(ValueError, match="'u'.*where"):
+        Rule("u", "unique", ("id",), {"where": "x > 0"})
+    with pytest.raises(ValueError, match="'m'.*where"):
+        Rule("m", "min_rows", (), {"n": 1, "where": "x > 0"})
+    Rule("ok", "not_null", ("id",), {"where": "x > 0"})
+    Rule("ok_fk", "foreign_key", ("id",), {"dim": None, "where": "x > 0"})
+
+
 def test_join_consistency_rule(spark):
     """Rule 13: joined-table agreement. Mismatch and no-match both violate
     (require_match default); require_match=False skips unmatched rows."""

@@ -2726,6 +2726,23 @@ def test_fuzzy_contamination_cross_corpus_only(spark):
     assert all(e != 104 for e, _ in pairs)
 
 
+def test_fuzzy_contamination_max_bucket_none_means_no_cap(spark, monkeypatch):
+    """``max_bucket=None`` turns the cap off, as in every near-dup operator:
+    a 3-row combined band bucket survives even when the module default cap
+    is 2."""
+    from data_validator_guard_spark.operators import dedup
+    from data_validator_guard_spark.operators.contamination import fuzzy_contamination
+
+    monkeypatch.setattr(dedup, "DEFAULT_MAX_BUCKET", 2)
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    train = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
+    eval_df = spark.createDataFrame([(101, text), (102, text)], "doc_id bigint, text string")
+    out = fuzzy_contamination(train, eval_df, "text", "doc_id", max_bucket=None).collect()
+    assert {(r.eval_id, r.train_id, r.jaccard) for r in out} == {(101, 1, 1.0), (102, 1, 1.0)}
+    capped = fuzzy_contamination(train, eval_df, "text", "doc_id", max_bucket=2)
+    assert capped.count() == 0
+
+
 def test_bloom_filter_contract(spark):
     """Bloom sketch pins: (1) no false negatives — every stored key probes
     True; (2) merging per-half partials is bit-identical to one filter over

@@ -311,6 +311,27 @@ def test_minhash_stream_pairs_across_restart(spark, tmp_path):
     assert all(2 not in p for p in pairs)
 
 
+def test_store_pairing_max_bucket_none_means_no_cap(spark, tmp_path, monkeypatch):
+    """``near_duplicates_from_store(max_bucket=None)`` pairs without a cap,
+    as every near-dup operator does, whatever the module default is."""
+    from data_validator_guard_spark.operators import dedup
+    from data_validator_guard_spark.streaming import near_duplicates_from_store
+
+    monkeypatch.setattr(dedup, "DEFAULT_MAX_BUCKET", 2)
+    text = "the quick brown fox jumps over the lazy dog again and again today"
+    docs = spark.createDataFrame([(i, text) for i in (1, 2, 3)], "doc_id long, text string")
+    store = str(tmp_path / "store")
+    sig, sh = dedup.build_signature_store(docs, "text", "doc_id")
+    sig.withColumn("batch_id", F.lit(0)).write.parquet(os.path.join(store, "signatures"))
+    sh.withColumn("batch_id", F.lit(0)).write.parquet(os.path.join(store, "shingles"))
+    pairs = {
+        (r.id1, r.id2)
+        for r in near_duplicates_from_store(spark, store, max_bucket=None).collect()
+    }
+    assert pairs == {(1, 2), (1, 3), (2, 3)}
+    assert near_duplicates_from_store(spark, store, max_bucket=2).count() == 0
+
+
 def test_hash_sample_is_streaming_safe(spark, tmp_path):
     """hash_sample is a pure per-row filter (no shuffle, no state), so it
     must work unchanged on a streaming DataFrame — the sampled stream is the
