@@ -12,10 +12,11 @@ Execution strategy (the part the reference could not have — SURVEY.md §4):
 
 0. **Compile once per suite.** :func:`compile` builds everything that does
    not depend on the input — every Column expression, the inline-FK values
-   (one guarded collect per inline dim), the totals grain with the drift
-   bucket, the aggregation lists, the violation ``explode`` array, the
-   verdict unpivot, the fragment builders and two empty frames — into a
-   frozen :class:`CompiledSuite`. ``validate`` compiles a suite on its
+   (one guarded collect per inline dim), each drift rule's baseline (one
+   collect), the totals grain with the drift bucket, the aggregation lists,
+   the violation ``explode`` array, the verdict unpivot, the fragment
+   builders and two empty local relations — into a frozen
+   :class:`CompiledSuite`. ``validate`` compiles a suite on its
    first use and keeps the result on the suite object
    (``RuleSuite.compiled``); every call then makes only the DataFrame calls
    that read its input. Building Columns crosses the Python↔JVM boundary
@@ -46,7 +47,8 @@ Execution strategy (the part the reference could not have — SURVEY.md §4):
    union is cached and shared between the two outputs.
 
 Caching: ``validate`` caches the fine histogram (only when a drift rule
-reads it) and the fragment union (only when there are fragments) through
+reads it; the drift collect fills it) and the fragment union (only when
+there are fragments) through
 :func:`~data_validator_guard_spark.session.track_persist`. The outputs are
 lazy, so the caller releases both with
 :func:`~data_validator_guard_spark.session.unpersist_intermediates` after
@@ -61,10 +63,12 @@ Operator choices:
 - **group_consistency**: exact distinct-count per group — an explicit,
   order-independent tightening of the reference's order-dependent
   ``x == x.iloc[0]`` (`maganamed_validation.py:231-232`; SURVEY.md §7 hard 4).
-- **drift**: the engine's one pandas UDF — ONE Arrow-batched
-  ``applyInPandas`` call over the fine histogram (the totals' grain)
-  unioned with the baseline, scoring every (partition, group) pair at
-  once; see :mod:`data_validator_guard_spark.operators.drift`.
+- **drift**: scored on the driver, with no Python worker. The compile
+  collects the baseline histogram once; each ``validate`` collects the fine
+  histogram (the totals' grain, cached, so the collect fills the cache the
+  totals read) and scores every (partition, group) pair at once with one
+  vectorized kernel; the scores are a local relation. See
+  :mod:`data_validator_guard_spark.operators.drift`.
 """
 
 from __future__ import annotations
@@ -85,7 +89,7 @@ from data_validator_guard_spark.rules import (
     Rule,
     RuleSuite,
 )
-from data_validator_guard_spark.session import track_persist
+from data_validator_guard_spark.session import local_frame, track_persist
 
 VERDICT_COLS = ("rule_id", "partition", "pass", "n_rows", "n_violations")
 VIOLATION_COLS = ("rule_id", "partition", "keys", "detail")
@@ -454,9 +458,10 @@ class CompiledSuite:
     """Everything :func:`validate` needs that does not depend on its input,
     built once per suite by :func:`compile`: Column expressions (the
     partition and key columns are inside them), the inline-FK values
-    (folded into ``isin`` row conditions), and two empty frames. A
-    ``Callable`` field binds compiled columns to an input with DataFrame
-    calls only.
+    (folded into ``isin`` row conditions), the drift baselines (inside the
+    drift fragments) and two empty local relations. A ``Callable`` field
+    binds compiled columns to an input with DataFrame calls only; a drift
+    fragment also collects its current histogram.
     """
 
     #: totals grain: partition, plus the first drift rule's group and bucket
@@ -547,13 +552,19 @@ def _gate(
     closure = suite.dependency_closure()
     if not closure:
         return None
+    import pandas as pd
+
     dep_ids = sorted({d for deps in closure.values() for d in deps})
     failed_dep = F.col("rule_id").isin(dep_ids) & ~F.col("pass")
     failed_cols = [F.col("rule_id").alias("__dep"), F.col("partition")]
     edges = F.broadcast(
-        spark.createDataFrame(
-            [(rid, d) for rid, deps in closure.items() for d in sorted(deps)],
+        local_frame(
+            spark,
             "rule_id string, __dep string",
+            pd.DataFrame(
+                [(rid, d) for rid, deps in closure.items() for d in sorted(deps)],
+                columns=["rule_id", "__dep"],
+            ),
         )
     )
     skip = F.lit(True)
@@ -588,8 +599,10 @@ def _gate(
 
 def compile(suite: RuleSuite) -> CompiledSuite:
     """Compile ``suite`` once: every Column expression, the inline-FK values
-    (the only Spark job: one guarded collect per inline dim) and the empty
-    frames. :func:`validate` memoizes the result on the suite
+    (one guarded collect per inline dim), each drift rule's baseline (one
+    collect; these are the only Spark jobs) and the empty frames, built as
+    local relations so that reading them starts no Python worker.
+    :func:`validate` memoizes the result on the suite
     (``RuleSuite.compiled``), so a suite pays this on its first use only."""
     from data_validator_guard_spark.operators.drift import bucketize, drift_fragment
 
@@ -764,8 +777,8 @@ def compile(suite: RuleSuite) -> CompiledSuite:
         ),
         gate=_gate(suite, spark),
         sample_key=F.concat_ws("\x1f", "rule_id", "partition", "keys", "detail"),
-        empty_weighted=spark.createDataFrame([], WEIGHTED_SCHEMA),
-        empty_verdicts=spark.createDataFrame([], VERDICT_SCHEMA),
+        empty_weighted=local_frame(spark, WEIGHTED_SCHEMA),
+        empty_verdicts=local_frame(spark, VERDICT_SCHEMA),
     )
 
 
@@ -793,17 +806,22 @@ def validate(
     frame, so the verdicts stay exact while the row emission is bounded. An
     out-of-range value raises before any Spark work.
 
-    Both are lazy. Verdicts for row- and table-level rules come entirely from
-    the single fused totals aggregation — materializing only verdicts never
-    touches the violation-row scan.
+    Both are lazy, except for drift: with a drift rule, this call runs the
+    job that computes (and caches) the fine histogram and collects it to
+    score the drift on the driver, and each further drift rule collects its
+    own histogram. A suite without a drift rule starts no Spark job here
+    once compiled. Verdicts for row- and table-level rules come entirely
+    from the single fused totals aggregation — materializing only verdicts
+    never touches the violation-row scan.
 
     Compiled once per suite: the first call compiles ``suite``
-    (:func:`compile`, which collects the inline-FK dims) and keeps the
-    result on the suite object; later calls only bind it to ``df``. Rule
-    params are read-only, so a suite cannot change under its compiled form,
-    but a dim or baseline DataFrame is read when the suite is compiled (an
-    inline dim's values) or whenever a plan runs: a caller whose dim or
-    baseline table changes builds a new suite.
+    (:func:`compile`, which collects the inline-FK dims and the drift
+    baselines) and keeps the result on the suite object; later calls only
+    bind it to ``df``. Rule params are read-only, so a suite cannot change
+    under its compiled form, but an inline dim's values and a drift
+    baseline are read when the suite is compiled, and any other dim
+    whenever a plan runs: a caller whose dim or baseline table changes
+    builds a new suite.
 
     Cached: the plan-level fragment union (small: aggregation / anti-join /
     drift outputs — row-level violation rows are NOT in it), so sinking both

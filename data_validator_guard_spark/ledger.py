@@ -98,13 +98,18 @@ def run_with_ledger(
     # violation_sample_ppm bounds the EMITTED violation rows (engine.validate
     # docstring); ledger rows_failed comes from verdict counters, so resume
     # accounting stays exact under sampling.
-    verdicts, violations = validate(pending, suite, violation_sample_ppm=violation_sample_ppm)
-    # cached so the parquet sink below materializes the cache and the
-    # ledger-entry aggregation reuses it — the commit point derives from the
-    # verdicts ALREADY IN HAND, never from re-reading the accumulated output
-    # directory (which grows with history; round-2 verdict "what's wrong" #4).
-    verdicts = track_persist(verdicts)
     try:
+        # inside the try: a drift suite's validate runs its histogram job,
+        # and the fine histogram it caches is released even when that raises
+        verdicts, violations = validate(
+            pending, suite, violation_sample_ppm=violation_sample_ppm
+        )
+        # cached so the parquet sink below materializes the cache and the
+        # ledger-entry aggregation reuses it — the commit point derives from
+        # the verdicts ALREADY IN HAND, never from re-reading the accumulated
+        # output directory (which grows with history; round-2 verdict "what's
+        # wrong" #4).
+        verdicts = track_persist(verdicts)
         _overwrite_partitions(verdicts, verdicts_path)
         _overwrite_partitions(violations, violations_path)
 

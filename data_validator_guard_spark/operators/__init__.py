@@ -3,8 +3,8 @@
 Each module is a Spark-first implementation of a capability family:
 
 - :mod:`uniqueness` — exact key counts and duplicate detection.
-- :mod:`drift` — distribution drift (PSI / chi-square) in one Arrow-batched
-  pandas call per statistic.
+- :mod:`drift` — distribution drift (PSI / chi-square): JVM histograms,
+  scored on the driver.
 - :mod:`schema` — schema contract, checked before any data scan.
 - :mod:`stats` — fused per-column statistics suite (one aggregation pass).
 - :mod:`snapshot_diff` — re-validate only the partitions that changed.

@@ -1,17 +1,21 @@
-"""Distribution-drift check — the engine's single pandas UDF (SURVEY.md §2.10).
+"""Distribution-drift check (SURVEY.md §2.10): per-group histograms in the
+JVM, scored on the driver.
 
 No ancestor exists in the reference (it has no statistical checks); the north
 rule adds it: per-group histograms of a numeric measure compared to a baseline
-snapshot with PSI and chi-square computed in an Arrow-batched grouped pandas
-UDF (`applyInPandas`), never per-row Python.
+snapshot with PSI and chi-square, never per-row Python.
 
-Each statistic is ONE pandas call for every group at once: the current and
-baseline histograms are unioned, tagged by side, and handed whole to one
-``groupBy(lit(0)).applyInPandas``, which builds ``[groups x buckets]`` count
-matrices and scores them with one vectorized kernel (:func:`psi_chi2`). The
-call's input is the two histograms, never rows, so a per-group call's fixed
-Python cost is paid once per statistic, not once per group ("Accelerating
-Python UDFs in Vectorized Query Execution", CIDR 2022).
+The histograms are Spark aggregations; only they reach Python. A statistic
+collects the current histogram and the baseline histogram to the driver
+through Arrow (the engine collects the baseline once, when its suite
+compiles), builds ``[groups x buckets]`` count matrices and scores every group
+with one vectorized kernel (:func:`psi_chi2`). The scores come back as a
+local relation. The collected histogram is at most partitions x groups x
+(len(edges)+1) rows, whatever the number of data rows: the same bound as the
+single task that scored it in a grouped pandas UDF, without the Python
+worker that UDF started on every call ("Accelerating Python UDFs in
+Vectorized Query Execution", CIDR 2022, locates that cost at the
+Python↔engine boundary).
 
 Determinism contract (SURVEY.md §7 hard point 2): bucket edges are fixed
 constants supplied by the caller — never derived from the data — and the
@@ -32,12 +36,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.group import GroupedData
 
 from data_validator_guard_spark.rules import Rule
+from data_validator_guard_spark.session import local_frame
 
 EPS = 1e-6  # fixed smoothing constant on proportions
-SIDE_CUR, SIDE_BASE = 0, 1  # the ``side`` tag of a histogram row in the union
+SIDE_CUR, SIDE_BASE = 0, 1  # the ``side`` tag of a collected histogram row
+SCORES_SCHEMA = "partition string, grp string, psi double"
+REPORT_SCHEMA = "grp string, psi double, chi2 double, n_cur bigint, n_base bigint"
 
 
 def bucketize(value: Column, edges: Sequence[float]) -> Column:
@@ -126,8 +132,8 @@ def _counts(
 
 def _tag(side: int, key_cols: list[Column]) -> list[Column]:
     """The select list that tags a histogram ``(grp, bucket, n)`` as one
-    side of the union: ``side int, *keys string, grp string, bucket bigint,
-    n bigint``. A NULL count reads as 0."""
+    side: ``side int, *keys string, grp string, bucket bigint, n bigint``.
+    A NULL count reads as 0."""
     return [
         F.lit(side).alias("side"),
         *key_cols,
@@ -137,12 +143,11 @@ def _tag(side: int, key_cols: list[Column]) -> list[Column]:
     ]
 
 
-def _one_group(current: DataFrame, baseline: DataFrame, *keys: str) -> GroupedData:
-    """Both histograms unioned, tagged by ``side`` (:func:`_tag`), as ONE
-    group. The baseline rows carry NULL ``keys``."""
-    cur = current.select(*_tag(SIDE_CUR, [F.col(k).cast("string").alias(k) for k in keys]))
-    base = baseline.select(*_tag(SIDE_BASE, [F.lit(None).cast("string").alias(k) for k in keys]))
-    return cur.unionByName(base).groupBy(F.lit(0).alias("__all"))
+def _sides(*sides: pd.DataFrame) -> pd.DataFrame | None:
+    """The collected sides as one frame; None when every side is empty. An
+    empty side is left out: its collected columns carry no dtype."""
+    rows = [s for s in sides if len(s)]
+    return pd.concat(rows, ignore_index=True) if rows else None
 
 
 def _psi_report_frame(pdf: pd.DataFrame, n_buckets: int) -> pd.DataFrame:
@@ -174,14 +179,19 @@ def psi_report(
     — one row per grp of either side (a side without the grp counts 0).
     ``n_cur``/``n_base`` total every row of the grp; the statistics read
     buckets -1..len(edges)-1 only. Repeated (grp, bucket) rows are summed.
-    The heavy work (the histograms) stays JVM-side; the one pandas call
-    receives both histograms whole — groups x buckets rows plus the
-    baseline's — never data rows.
+    The heavy work (the histograms) stays JVM-side; both histograms are
+    collected to the driver — groups x buckets rows each, never data rows —
+    and the scores return as a local relation, so both histograms are read
+    when this is called.
     """
-    n_buckets = len(edges)
-    return _one_group(current, baseline).applyInPandas(
-        lambda pdf: _psi_report_frame(pdf, n_buckets),
-        "grp string, psi double, chi2 double, n_cur bigint, n_base bigint",
+    sides = _sides(
+        current.select(*_tag(SIDE_CUR, [])).toPandas(),
+        baseline.select(*_tag(SIDE_BASE, [])).toPandas(),
+    )
+    return local_frame(
+        current.sparkSession,
+        REPORT_SCHEMA,
+        None if sides is None else _psi_report_frame(sides, len(edges)),
     )
 
 
@@ -277,9 +287,10 @@ def drift_violations(
     certify current data; disappearance is a min_rows / cardinality_range
     rule's job.
 
-    One pandas call scores every pair: its input is ``cur`` unioned with the
-    baseline, at most partitions x groups x (len(edges)+1) rows plus the
-    baseline's rows, whatever the number of data rows.
+    The driver scores every pair at once: ``cur`` is collected (at most
+    partitions x groups x (len(edges)+1) rows, whatever the number of data
+    rows) and scored against the baseline collected when the rule was
+    compiled; the scores return as a local relation.
 
     Returns a weighted violations fragment
     ``(rule_id, partition, keys, detail, weight)`` — one row per drifted
@@ -291,11 +302,13 @@ def drift_violations(
 def drift_fragment(
     rule: Rule, part: Column
 ) -> Callable[[DataFrame, DataFrame | None], DataFrame]:
-    """:func:`drift_violations` compiled once: the column expressions and
-    the tagged baseline are built here (the grain of a histogram of ``df``
-    on the first call without ``cur``), and the returned ``bind(df, cur)``
-    makes only the DataFrame calls that read its input. The engine keeps
-    the returned function on its compiled suite."""
+    """:func:`drift_violations` compiled once: the column expressions are
+    built here (the grain of a histogram of ``df`` on the first call without
+    ``cur``) and the baseline is collected here, once. The returned
+    ``bind(df, cur)`` collects the current histogram (one Spark action per
+    call), scores it on the driver and returns the drifted groups over a
+    local relation. The engine keeps the returned function on its compiled
+    suite."""
     p = rule.params
     edges = p["edges"]
     n_buckets = len(edges)
@@ -311,8 +324,13 @@ def drift_fragment(
 
     count = F.count(F.lit(1)).alias("n")
     cur_side = _tag(SIDE_CUR, [F.col("partition").cast("string").alias("partition")])
-    base = p["baseline"].select(*_tag(SIDE_BASE, [F.lit(None).cast("string").alias("partition")]))
-    one_group = F.lit(0).alias("__all")
+    base = (
+        p["baseline"]
+        .select(*_tag(SIDE_BASE, [F.lit(None).cast("string").alias("partition")]))
+        .toPandas()
+    )
+    spark = p["baseline"].sparkSession
+    no_scores = local_frame(spark, SCORES_SCHEMA)
     drifted = F.col("psi") > F.lit(threshold)
     out = [
         F.lit(rule.rule_id).alias("rule_id"),
@@ -324,17 +342,14 @@ def drift_fragment(
         F.lit(1).cast("bigint").alias("weight"),
     ]
 
-    def score(pdf):  # no type hints: applyInPandas would read them as the UDF kind
-        return _drift_frame(pdf, n_buckets)
-
     def bind(df: DataFrame, cur: DataFrame | None = None) -> DataFrame:
         if cur is None:
             cur = df.groupBy(*grain()).agg(count)
+        hist = cur.select(*cur_side).toPandas()
         scores = (
-            cur.select(*cur_side)
-            .unionByName(base)
-            .groupBy(one_group)
-            .applyInPandas(score, "partition string, grp string, psi double")
+            local_frame(spark, SCORES_SCHEMA, _drift_frame(_sides(hist, base), n_buckets))
+            if len(hist)
+            else no_scores
         )
         return scores.filter(drifted).select(*out)
 

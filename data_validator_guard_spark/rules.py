@@ -57,7 +57,8 @@ cardinality_range   table-level: distinct count of column within [lo, hi]
                     aggregation instead, at any cardinality. NULLs are not
                     counted either way
 drift               distribution drift vs a baseline histogram (PSI /
-                    chi-square), the engine's one pandas UDF (§2.10)
+                    chi-square), scored on the driver from the collected
+                    histograms (§2.10)
 ==================  =========================================================
 
 Every ROW-level rule and ``foreign_key`` additionally accept

@@ -3,9 +3,12 @@ owner of cached frames.
 
 The reference runs eager single-threaded pandas (no session concept). Here the
 session is configured for the plans this engine emits: AQE on (runtime shuffle
-coalescing + skew-join splitting), Arrow on (the drift statistic is the one
-pandas UDF), and a shuffle-partition count suited to the local[] harness while
-remaining a plain config knob for a real cluster.
+coalescing + skew-join splitting), Arrow on (the drift histograms reach the
+driver as Arrow batches), and a shuffle-partition count suited to the local[]
+harness while remaining a plain config knob for a real cluster.
+
+Constant frames: :func:`local_frame` builds a small driver-side frame as a
+local relation, so reading it starts no Python worker.
 
 Caching: this is the only module that persists or releases a frame. Every
 frame the package reuses across subplans (``engine.validate``'s fine
@@ -25,16 +28,21 @@ from __future__ import annotations
 
 import os
 import threading
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 DEFAULT_CONFS: dict[str, str] = {
     # AQE: coalesce small shuffle partitions, split skewed ones at runtime.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for the pandas-UDF drift path (SURVEY.md §2.10) — batched, not per-row.
+    # Arrow for toPandas: the drift histograms reach the driver as Arrow
+    # batches (SURVEY.md §2.10).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Broadcast dims/rulebooks aggressively; every join in this engine is
     # intentionally broadcastable (SURVEY.md §2.3: "every join ... is a
@@ -75,6 +83,26 @@ def get_session(
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, schema: str, data: pd.DataFrame | None = None) -> DataFrame:
+    """The rows of ``data`` (none when omitted) as a local relation with the
+    DDL ``schema``, every field nullable: a plan reads it as a
+    ``LocalTableScan`` on the driver. ``createDataFrame`` of a list or of an
+    empty pandas frame is a Python RDD instead, and every action that scans
+    it starts Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    table = (
+        arrow.empty_table()
+        if data is None
+        else pa.Table.from_pandas(data, schema=arrow, preserve_index=False)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 # Frames cached by track_persist since the last unpersist_intermediates().

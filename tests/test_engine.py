@@ -867,19 +867,22 @@ def _jobs_started(spark, fn) -> int:
 
 
 def test_validate_compiles_a_suite_once(spark):
-    """The flagship-shaped suite compiles on its first validate: the
-    inline-FK collect starts 2 jobs before any action. A second validate
-    reuses the compiled form and starts none. A bad violation_sample_ppm
-    fails before any job, even on a suite never compiled."""
+    """The flagship suite compiles on its first validate: the inline-FK
+    collect starts 2 jobs before any action. A second validate reuses the
+    compiled form and starts none. With the drift rule, the compile also
+    collects the baseline once, and each validate collects its current
+    histogram to score it: a warm call starts exactly that collect's jobs,
+    fewer than the first call. A bad violation_sample_ppm fails before any
+    job, even on a suite never compiled."""
     from pyspark.sql import functions as F
 
     from data_validator_guard_spark.operators.drift import histogram
+    from data_validator_guard_spark.session import track_persist, unpersist_intermediates
     from data_validator_guard_spark.suites import LENGTH_EDGES, source_code_suite
     from data_validator_guard_spark.synth import source_code_table
 
     df = source_code_table(spark, 2_000, seed=3)
-    baseline = histogram(df, "lang", F.length("content"), LENGTH_EDGES)
-    suite = source_code_suite(spark, baseline_hist=baseline)
+    suite = source_code_suite(spark)
 
     def bad_ppm():
         with pytest.raises(ValueError, match="violation_sample_ppm"):
@@ -890,6 +893,29 @@ def test_validate_compiles_a_suite_once(spark):
     compiled = suite.compiled
     assert _jobs_started(spark, lambda: validate(df, suite)) == 0
     assert suite.compiled is compiled
+
+    baseline = histogram(df, "lang", F.length("content"), LENGTH_EDGES)
+    drift_suite = source_code_suite(spark, baseline_hist=baseline)
+
+    def drift_validate():
+        unpersist_intermediates()  # each call caches and fills its own histogram
+        validate(df, drift_suite)
+
+    first = _jobs_started(spark, drift_validate)
+    compiled = drift_suite.compiled
+
+    def histogram_collect():
+        unpersist_intermediates()
+        fine = track_persist(df.groupBy(*compiled.grain).agg(*compiled.fine_aggs))
+        fine.select(*compiled.drift_cur).toPandas()
+
+    collect = _jobs_started(spark, histogram_collect)
+    second = _jobs_started(spark, drift_validate)
+    third = _jobs_started(spark, drift_validate)
+    unpersist_intermediates()
+    assert second == collect and third == collect, (first, collect, second, third)
+    assert second < first and third < first, (first, second, third)
+    assert drift_suite.compiled is compiled
 
 
 def _compile_suite(spark):
@@ -929,6 +955,43 @@ def _compile_suite(spark):
         partition_by="p",
         key_cols=("id",),
     )
+
+
+def test_drift_suite_over_empty_input(spark):
+    """A drift suite over an empty input (a ledger resume with every
+    partition done reads one) raises nothing and returns no verdict or
+    violation rows; the drift scores are an empty local relation."""
+    from pyspark.sql import functions as F
+
+    from data_validator_guard_spark import plans
+    from data_validator_guard_spark.operators.drift import drift_violations, histogram
+    from data_validator_guard_spark.session import unpersist_intermediates
+
+    df = spark.createDataFrame(
+        [(i, ["en", "de"][i % 2], "x" * (i % 10)) for i in range(40)],
+        "id bigint, lang string, txt string",
+    )
+    edges = [0.0, 4.0, 8.0]
+    rule = Rule(
+        "txt_drift",
+        "drift",
+        ("txt",),
+        {
+            "group_by": "lang",
+            "value": "length(txt)",
+            "edges": edges,
+            "baseline": histogram(df, "lang", F.length("txt"), edges),
+            "threshold": 0.1,
+        },
+    )
+    empty = df.filter(F.lit(False))
+    verdicts, violations = validate(empty, RuleSuite("d", [rule], partition_by="lang"))
+    assert verdicts.collect() == [] and violations.collect() == []
+    unpersist_intermediates()  # else the scores plan reads validate's cached union
+    scores = drift_violations(empty, rule, F.col("lang"))
+    assert scores.collect() == []
+    plan = plans.plan_string(scores, "simple").strip().splitlines()
+    assert len(plan) == 2 and plan[1].startswith("LocalTableScan <empty>"), plan
 
 
 def test_memoized_suite_matches_fresh_suite(spark):

@@ -166,6 +166,34 @@ def test_session_overwrite_mode_is_left_unchanged(spark, suite, tmp_path):
         spark.conf.set(key, saved)
 
 
+def test_resume_of_a_drift_suite_with_every_partition_done(spark, tmp_path):
+    """A drift suite's validate collects its histogram when called; on a
+    resume with every partition done that histogram is empty, and the run
+    validates nothing."""
+    from data_validator_guard_spark.operators.drift import histogram
+
+    df = _mkdf(spark)
+    edges = [0.0, 10.0, 20.0]
+    drift = Rule(
+        "v_drift",
+        "drift",
+        ("v",),
+        {
+            "group_by": "grp",
+            "value": "v",
+            "edges": edges,
+            "baseline": histogram(df, "grp", F.col("v"), edges),
+            "threshold": 0.1,
+        },
+    )
+    suite = RuleSuite("d", [Rule("v_not_null", "not_null", ("v",)), drift], partition_by="grp")
+    out = str(tmp_path / "run")
+    s1 = run_with_ledger(df, suite, out, snapshot_id="s1", rule_version="r1")
+    assert s1 == {"partitions_done_before": 0, "partitions_validated": 4}
+    s2 = run_with_ledger(df, suite, out, snapshot_id="s1", rule_version="r1")
+    assert s2 == {"partitions_done_before": 4, "partitions_validated": 0}
+
+
 def test_ledger_releases_its_caches(spark, suite, tmp_path):
     """After run_with_ledger returns, no RDD it cached (its verdicts,
     validate()'s fragment union) is still persisted."""

@@ -152,9 +152,10 @@ def test_fused_drift_adds_no_extra_scan(spark, docs):
 
 
 def test_drift_is_one_pandas_call_without_a_grid(spark, docs):
-    """A drift suite's verdicts run the PSI as ONE grouped pandas call over
-    the unioned histograms: one FlatMapGroupsInPandas, and no
-    (partition, grp) x bucket grid — no cross join of any kind."""
+    """A drift suite's verdicts score the PSI on the driver: no grouped
+    pandas call (no FlatMapGroupsInPandas), no (partition, grp) x bucket
+    grid — no cross join of any kind — and the drift scores are a local
+    relation, the suite's only LocalTableScan."""
     from data_validator_guard_spark.engine import validate
     from data_validator_guard_spark.operators.drift import histogram
     from data_validator_guard_spark.rules import Rule, RuleSuite
@@ -174,8 +175,58 @@ def test_drift_is_one_pandas_call_without_a_grid(spark, docs):
     )
     verdicts, _ = validate(docs, RuleSuite("p", [rule], partition_by="source"))
     s = plans.plan_string(verdicts, "simple")
-    assert s.count("FlatMapGroupsInPandas") == 1, s
+    assert s.count("FlatMapGroupsInPandas") == 0, s
     assert "CartesianProduct" not in s and "BroadcastNestedLoopJoin" not in s, s
+    assert s.count("LocalTableScan") == 1, s
+
+
+def test_validate_plans_start_no_python_worker(spark, docs):
+    """Over parquet input, the executed verdicts and violations plans of a
+    row-rule suite (its violations union the empty plan-level frame), a
+    depends_on suite (the gate's edge frame) and a drift suite (the drift
+    scores) read no Python RDD (no ExistingRDD scan) and run no grouped
+    pandas call: the engine's constant frames are local relations."""
+    from data_validator_guard_spark.engine import validate
+    from data_validator_guard_spark.operators.drift import histogram
+    from data_validator_guard_spark.rules import Rule, RuleSuite
+
+    edges = [0.0, 100.0, 300.0]
+    not_null = Rule("lang_set", "not_null", ("lang",))
+    suites = [
+        RuleSuite("rows", [not_null], partition_by="source"),
+        RuleSuite(
+            "gated",
+            [
+                not_null,
+                Rule("text_len", "length_range", ("text",), {"hi": 200, "depends_on": ["lang_set"]}),
+            ],
+            partition_by="source",
+        ),
+        RuleSuite(
+            "drift",
+            [
+                Rule(
+                    "dr",
+                    "drift",
+                    ("text",),
+                    {
+                        "group_by": "lang",
+                        "value": "length(text)",
+                        "edges": edges,
+                        "baseline": histogram(docs, "lang", F.length("text"), edges),
+                        "threshold": 0.2,
+                    },
+                )
+            ],
+            partition_by="source",
+        ),
+    ]
+    for suite in suites:
+        for out in validate(docs, suite):
+            out.collect()
+            s = plans.plan_string(out, "simple")
+            assert "isFinalPlan=false" not in s, s
+            assert "ExistingRDD" not in s and "FlatMapGroupsInPandas" not in s, (suite.name, s)
 
 
 def test_topk_compiles_to_take_ordered_not_global_window(spark):
