@@ -7,6 +7,17 @@ coalescing + skew-join splitting), Arrow on (the drift histograms reach the
 driver as Arrow batches), and a shuffle-partition count suited to the local[]
 harness while remaining a plain config knob for a real cluster.
 
+Generated-code cache: Spark 4.1.2 keeps at most 100 compiled classes, which
+is too few for this engine's plans: a warm batch recompiled 22-31 of the ~99
+classes its cold batch compiled. The cache is keyed on (context class
+loader, code), and each whole-stage class is compiled once on the driver
+thread at planning and again on a task thread, so it takes two entries. The
+Guava cache behind it (``NonFateSharingCache``) sets only ``maximumSize``,
+so Guava's default concurrency level of 4 splits it into four segments that
+each evict at about 25 entries, well before 100, and identity hash codes
+decide which classes thrash. ``DEFAULT_CONFS`` sizes it so a warm run of
+the same plans compiles nothing.
+
 Constant frames: :func:`local_frame` builds a small driver-side frame as a
 local relation, so reading it starts no Python worker.
 
@@ -48,6 +59,12 @@ DEFAULT_CONFS: dict[str, str] = {
     # intentionally broadcastable (SURVEY.md §2.3: "every join ... is a
     # broadcast join except the uniqueness self-check").
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Static: read once, when the session builds. The default 100 entries
+    # thrash on this engine's plans: each whole-stage class takes two
+    # entries (the key holds the compiling thread's class loader, and a
+    # class compiles on the driver at planning and again on a task thread),
+    # and the cache's four Guava segments each evict at ~25 entries.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # ANSI on (the Spark 4 default, pinned explicitly): a VALIDATION engine
     # must fail loudly on overflow / invalid casts in its own arithmetic,
     # never silently null them into wrong verdicts. Every oracle-facing cast

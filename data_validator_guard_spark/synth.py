@@ -20,8 +20,11 @@ Planted defects (rates per FIXTURES.md §1):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from data_validator_guard_spark.session import local_frame
 
 ALLOWED_LANGS = ["python", "java", "scala", "go", "rust", "c", "cpp", "js"]
 LANG_EXT = {
@@ -149,7 +152,10 @@ def source_code_table(
 
 
 def allowed_langs_dim(spark: SparkSession) -> DataFrame:
-    """The broadcast referential dimension (FIXTURES.md §1)."""
-    return spark.createDataFrame(
-        [(l, LANG_EXT[l]) for l in ALLOWED_LANGS], "lang string, ext string"
+    """The broadcast referential dimension (FIXTURES.md §1), as a local
+    relation: the inline-FK collect at compile starts no Python worker."""
+    return local_frame(
+        spark,
+        "lang string, ext string",
+        pd.DataFrame({"lang": ALLOWED_LANGS, "ext": [LANG_EXT[l] for l in ALLOWED_LANGS]}),
     )

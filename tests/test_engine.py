@@ -918,6 +918,39 @@ def test_validate_compiles_a_suite_once(spark):
     assert drift_suite.compiled is compiled
 
 
+def test_warm_validation_compiles_no_code(spark):
+    """A second validation of the same input reuses every generated class:
+    the code cache holds the plans of a whole validate (verdicts collected,
+    violations to the noop sink), so Spark compiles nothing the second
+    time. Read from Spark's own compile counter."""
+    from pyspark.sql import functions as F
+
+    from data_validator_guard_spark.operators.drift import histogram
+    from data_validator_guard_spark.session import unpersist_intermediates
+    from data_validator_guard_spark.suites import LENGTH_EDGES, source_code_suite
+    from data_validator_guard_spark.synth import source_code_table
+
+    df = source_code_table(spark, 2_000, seed=5)
+    suite = source_code_suite(
+        spark, baseline_hist=histogram(df, "lang", F.length("content"), LENGTH_EDGES)
+    )
+    metrics = getattr(spark._jvm.org.apache.spark.metrics.source, "CodegenMetrics$")
+    compiled = metrics.__getattr__("MODULE$").METRIC_COMPILATION_TIME()
+
+    def run():
+        try:
+            verdicts, violations = validate(df, suite)
+            verdicts.collect()
+            violations.write.format("noop").mode("overwrite").save()
+        finally:
+            unpersist_intermediates()
+
+    run()
+    before = compiled.getCount()
+    run()
+    assert compiled.getCount() == before
+
+
 def _compile_suite(spark):
     """A suite with a where guard, depends_on, exact cardinality, an inline
     FK, unique and drift. Built anew on each call."""

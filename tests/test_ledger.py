@@ -236,3 +236,37 @@ def test_stats_partitions_match_verdict_partitions(spark, suite, tmp_path):
     assert labels("stats") == verdict_labels
     done = spark.read.parquet(f"{out}/ledger").select("partition").distinct()
     assert {r.partition for r in done.collect()} == {p for p, _ in verdict_labels}
+
+
+def test_each_partition_is_written_as_one_file(spark, suite, tmp_path):
+    """One batch writes one parquet file per verdict partition in verdicts/
+    and violations/, and one ledger file; the next batch appends one more
+    ledger file."""
+    import glob
+
+    out = str(tmp_path / "run")
+
+    def files(pattern: str) -> list[int]:
+        return [len(glob.glob(f"{d}/part-*.parquet")) for d in glob.glob(f"{out}/{pattern}")]
+
+    run_with_ledger(_mkdf(spark), suite, out, "s1", "r1")
+    assert files("verdicts/pt=*") == [1] * 4
+    assert files("violations/pt=*") == [1] * 4
+    assert files("ledger") == [1]
+    run_with_ledger(_mkdf(spark), suite, out, "s2", "r1")
+    assert files("ledger") == [2]
+
+
+def test_warm_batch_compiles_no_code(spark, suite, tmp_path):
+    """A batch over a new snapshot compiles nothing once an earlier batch
+    has run the same plans: the batch constants (snapshot id, rule version,
+    ts) reach the ledger rows as data, not as literals in generated code."""
+    metrics = getattr(spark._jvm.org.apache.spark.metrics.source, "CodegenMetrics$")
+    compiled = metrics.__getattr__("MODULE$").METRIC_COMPILATION_TIME()
+    out = str(tmp_path / "run")
+    # the first batch finds no ledger; the second is the first to read it
+    run_with_ledger(_mkdf(spark), suite, out, "s1", "r1")
+    run_with_ledger(_mkdf(spark), suite, out, "s2", "r1")
+    before = compiled.getCount()
+    assert run_with_ledger(_mkdf(spark), suite, out, "s3", "r1")["partitions_validated"] == 4
+    assert compiled.getCount() == before
