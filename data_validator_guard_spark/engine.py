@@ -510,7 +510,10 @@ def _guard(r: Rule, cond: Column) -> Column:
 
 def _inline_fk_violation(r: Rule) -> tuple[Column, Column]:
     """A single-column ``inline=True`` foreign key as a row rule: the dim's
-    values are collected (one Spark job per compile) into an ``isin``."""
+    values are collected into an ``isin`` at compile. The collect is
+    ``distinct().limit().collect()``, which starts two Spark jobs per
+    compile (the distinct aggregation, then the limit), even for a
+    local-relation dim."""
     dim: DataFrame = r.params["dim"]
     dim_col = list(r.params.get("dim_columns", r.columns))[0]
     # Guarded driver-side collect: inline dims are small *by contract*;

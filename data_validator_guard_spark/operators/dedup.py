@@ -15,18 +15,17 @@ Scale design:
   sub-signatures propose candidates, exact Hamming verifies. Fully
   expression-level.
 - **embedding cosine**: integer sign-bucket LSH proposes, an exact integer
-  cosine test verifies (shared with ``similarity.semantic_near_duplicates``).
+  cosine test verifies.
 
-Pair generation: every near-dup operator here, and the semantic, fuzzy
-contamination and streaming-store operators built on this module, form
-their candidates with :func:`bucket_pairs` — drop buckets over
-``max_bucket`` rows, then one within-bucket self-join under a pair
-predicate. ``max_bucket=None`` turns the cap off in every operator; the
-default is ``DEFAULT_MAX_BUCKET``. The containment core behind
-``repo_containment`` and ``code_clone_pairs`` keeps its own hash join: its
-hot-hash cap is a window count whose hash partitioning the join reuses,
-which times faster there than the count and semi-join of
-:func:`bucket_pairs`. The two-sided MinHash miner (a new batch
+Pair generation: every near-dup operator here, and the fuzzy contamination
+and streaming-store operators built on this module, form their candidates
+with :func:`bucket_pairs` — drop buckets over ``max_bucket`` rows, then one
+within-bucket self-join under a pair predicate. ``max_bucket=None`` turns
+the cap off in every operator; the default is ``DEFAULT_MAX_BUCKET``. The
+containment core behind ``repo_containment`` and ``code_clone_pairs`` keeps
+its own hash join: its hot-hash cap is a window count whose hash
+partitioning the join reuses, which times faster there than the count and
+semi-join of :func:`bucket_pairs`. The two-sided MinHash miner (a new batch
 against a stored corpus, eval against train) is one function,
 ``_minhash_probe_pairs``; its two operators differ only in which colliding
 pairs they keep.
@@ -548,7 +547,7 @@ def auto_n_planes(n_rows: int, target_bucket_size: int = 1_000) -> int:
     return max(1, math.ceil(math.log2(n_rows / target_bucket_size)))
 
 
-# Overflow guard bound shared by every exact-cosine consumer: with
+# Overflow guard bound of the exact-cosine verify: with
 # |a|², |b|² < 3e16, Cauchy-Schwarz bounds |dot| < 3e16, so dot²·10⁴ < 9e36
 # and t²·|a|²·|b|² < 9e36 — both inside decimal(38,0).
 _N2_BOUND = 3 * 10**16
@@ -626,32 +625,13 @@ def embedding_near_duplicates(
     base = df.select(
         F.col(id_col).alias("id"), _quantize(F.col(vec_col), scale).alias("__q")
     )
-    keyed = base.withColumn("__bucket", _int_lsh_bits(F.col("__q"), n_planes))
-    return _exact_cosine_pairs(
-        keyed, "__bucket", max_bucket, threshold_cents, "embedding_near_duplicates",
-        persist=True,
+    keyed = base.select(
+        "id",
+        "__q",
+        _int_lsh_bits(F.col("__q"), n_planes).alias("__bucket"),
+        checked_norm2(F.col("__q"), "embedding_near_duplicates").alias("__n2"),
     )
-
-
-def _exact_cosine_pairs(
-    keyed: DataFrame,
-    bucket_col: str,
-    max_bucket: int | None,
-    threshold_cents: int,
-    op_name: str,
-    *,
-    persist: bool = False,
-) -> DataFrame:
-    """Within-bucket exact-cosine verify shared by
-    ``embedding_near_duplicates`` (LSH bucket) and
-    ``similarity.semantic_near_duplicates`` (IVF cell): ``id1, id2`` over
-    ``keyed`` = ``id, __q`` (quantized vector) plus ``bucket_col``, keeping
-    pairs in one bucket with cos >= threshold_cents/100. |v|² carries the
-    ``checked_norm2`` overflow guard (its message names ``op_name``); the
-    decision is :func:`exact_cos_ge`, so no float touches it. ``persist``
-    passes through to :func:`bucket_pairs`."""
-    keyed = keyed.withColumn("__n2", checked_norm2(F.col("__q"), op_name))
-    pairs = bucket_pairs(keyed, [bucket_col], max_bucket, persist=persist).select(
+    pairs = bucket_pairs(keyed, ["__bucket"], max_bucket, persist=True).select(
         F.col("a.id").alias("id1"),
         F.col("b.id").alias("id2"),
         _int_dot(F.col("a.__q"), F.col("b.__q")).alias("__dot"),

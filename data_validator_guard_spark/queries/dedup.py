@@ -572,120 +572,3 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cluster_size") * F.col("n_clusters")).cast("bigint").alias("n_docs"),
         )
     )
-
-
-# =====================================================================
-# 63. SemDeDup — semantic near-duplicate pairs (Abbas et al. 2023,
-#     arXiv:2303.09540): candidates from the deterministic integer
-#     k-means (IVF) index, exact-integer cosine verification. The WHOLE
-#     pipeline — perturbation, quantization, md5 seeding, Lloyd step, L2
-#     cell assignment, HUGEINT threshold — is SQL-replicable, so even the
-#     cell-boundary recall loss is oracle-identical. Planted near-dups:
-#     50 copies with coord 1 shifted +0.25 (cos ≈ 0.95-0.97 against
-#     unit-norm originals), threshold 0.95 → the decision boundary cuts
-#     through the planted distribution instead of rubber-stamping it.
-# =====================================================================
-_SEM_DIST_SQL = (
-    "list_sum(list_transform(generate_series(1, len({v})), "
-    "d -> ({v}[d] - {c}[d]) * ({v}[d] - {c}[d])))"
-)
-
-_SEM_ORACLE = rf"""
-WITH src AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-  FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000,
-         list_transform(generate_series(1, len(embedding)),
-                        d -> CASE WHEN d = 1 THEN CAST(embedding[d] AS DOUBLE) + 0.25
-                             ELSE CAST(embedding[d] AS DOUBLE) END)
-  FROM embeddings WHERE vec_id < 50
-),
-e AS (
-  SELECT vec_id, list_transform(emb, x -> CAST(floor(x * 1000 + 0.5) AS BIGINT)) AS qv
-  FROM src
-),
-sd AS (SELECT vec_id, qv, md5(CAST(vec_id AS VARCHAR)) AS h FROM e ORDER BY h LIMIT 8),
-c0 AS (SELECT ROW_NUMBER() OVER (ORDER BY h) - 1 AS centroid_id, qv AS cvec FROM sd),
-d0 AS (
-  SELECT e.vec_id, c.centroid_id, {_SEM_DIST_SQL.format(v='e.qv', c='c.cvec')} AS dist
-  FROM e CROSS JOIN c0 c
-),
-a0 AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT vec_id, centroid_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-    FROM d0
-  ) WHERE rn = 1
-),
-sums AS (
-  SELECT a.centroid_id, d - 1 AS pos, SUM(e.qv[d]) AS s, COUNT(*) AS n
-  FROM a0 a JOIN e USING (vec_id), generate_series(1, 64) AS g(d)
-  GROUP BY a.centroid_id, pos
-),
-c1new AS (
-  SELECT centroid_id, list(CAST(floor(CAST(s AS DOUBLE) / n) AS BIGINT) ORDER BY pos) AS cvec
-  FROM sums GROUP BY centroid_id
-),
-c1 AS (
-  SELECT c0.centroid_id, COALESCE(c1new.cvec, c0.cvec) AS cvec
-  FROM c0 LEFT JOIN c1new USING (centroid_id)
-),
-d1 AS (
-  SELECT e.vec_id, c.centroid_id, {_SEM_DIST_SQL.format(v='e.qv', c='c.cvec')} AS dist
-  FROM e CROSS JOIN c1 c
-),
-a1 AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT vec_id, centroid_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-    FROM d1
-  ) WHERE rn = 1
-),
-cells AS (
-  SELECT a1.vec_id AS id, a1.centroid_id, e.qv,
-         list_sum(list_transform(e.qv, x -> x * x)) AS n2
-  FROM a1 JOIN e USING (vec_id)
-),
-pairs AS (
-  SELECT a.id AS id1, b.id AS id2,
-         list_sum(list_transform(generate_series(1, len(a.qv)),
-                                 d -> a.qv[d] * b.qv[d])) AS dot,
-         a.n2 AS na2, b.n2 AS nb2
-  FROM cells a JOIN cells b ON a.centroid_id = b.centroid_id AND a.id < b.id
-)
-SELECT id1, id2 FROM pairs
-WHERE dot > 0
-  AND CAST(10000 AS HUGEINT) * CAST(dot AS HUGEINT) * CAST(dot AS HUGEINT)
-      >= CAST({95 * 95} AS HUGEINT) * CAST(na2 AS HUGEINT) * CAST(nb2 AS HUGEINT)
-"""
-
-
-@query("dedup_semantic", oracle=_SEM_ORACLE)
-def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup over the embeddings table with 50 planted near-duplicates
-    (coord-1 +0.25 shift, cos ≈ 0.95-0.97): k-means cells propose, the
-    exact decimal cosine kit disposes. Cell-straddling planted pairs are
-    the family's by-design recall loss — reproduced identically by the
-    oracle because the whole index build is deterministic integer math."""
-    from data_validator_guard_spark.operators.similarity import (
-        semantic_near_duplicates,
-    )
-
-    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    base = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    pert = emb.filter(F.col("vec_id") < 50).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: F.when(i == 0, x.cast("double") + F.lit(0.25)).otherwise(
-                x.cast("double")
-            ),
-        ).alias("embedding"),
-    )
-    corpus = base.unionByName(pert)
-    return semantic_near_duplicates(
-        corpus, "embedding", "vec_id", n_clusters=8, iters=1, threshold_cents=95
-    )

@@ -256,12 +256,13 @@ def q_violations_code(spark: SparkSession, sf_dir: str) -> DataFrame:
 # repos — the cross-repo duplication miner every source-code curation
 # pipeline runs (vendored dependencies dominate naive per-file training
 # weight). The corpus has no natural exact duplicates, so the query
-# plants them deterministically in its own derivation (the dedup_semantic
-# pattern): every doc_id % 11 == 0 file's content becomes one of five
-# canonical "vendored blobs", spread across the kid-derived repos
-# (including the 30% hot repo). One md5-keyed hash aggregation — uniform
-# shuffle keys regardless of repo skew; count_distinct(repo) expands to
-# Spark's standard two-phase distinct aggregate.
+# plants them deterministically in its own derivation (as the near-dup
+# queries plant perturbed copies): every doc_id % 11 == 0 file's content
+# becomes one of five canonical "vendored blobs", spread across the
+# kid-derived repos (including the 30% hot repo). One md5-keyed hash
+# aggregation — uniform shuffle keys regardless of repo skew;
+# count_distinct(repo) expands to Spark's standard two-phase distinct
+# aggregate.
 # =====================================================================
 _VENDORED_ORACLE = """
 WITH k AS (

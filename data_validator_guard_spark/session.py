@@ -23,8 +23,8 @@ local relation, so reading it starts no Python worker.
 
 Caching: this is the only module that persists or releases a frame. Every
 frame the package reuses across subplans (``engine.validate``'s fine
-histogram and fragment union, the ledger's verdicts, the near-dup, stats and
-similarity operators' intermediates, ``jobs/curate.py``'s labeled docs) is
+histogram and fragment union, the ledger's verdicts, the near-dup and stats
+operators' intermediates, ``jobs/curate.py``'s labeled docs) is
 cached with :func:`track_persist` at ``MEMORY_AND_DISK``. DataFrames are
 lazy, so the code that caches a frame cannot know when its caller is done
 with it: after the terminal action (the last sink), the caller calls

@@ -34,6 +34,14 @@ if os.path.isdir(os.path.join(_repo_root, "data_validator_guard_spark")):
     sys.path.insert(0, _repo_root)
 
 
+def _positive_int(text: str) -> int:
+    """argparse type for a count that must be at least 1."""
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument(
@@ -44,7 +52,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--out", required=True, help="output dir (verdicts/ violations/ ledger/)")
     p.add_argument("--snapshot-id", required=True, help="input snapshot lineage id")
     p.add_argument("--rule-version", default="v1")
-    p.add_argument("--partitions", type=int, default=16, help="repo-hash verdict buckets")
+    p.add_argument(
+        "--partitions", type=_positive_int, default=16, help="repo-hash verdict buckets"
+    )
     p.add_argument("--baseline-hist", default=None, help="optional parquet (grp,bucket,n) for drift")
     p.add_argument(
         "--violation-sample-ppm",

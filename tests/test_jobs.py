@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 
 def test_curate_pipeline_end_to_end(spark, tmp_path):
     """filter -> dedup -> split -> decontaminate -> chunk over sf0.001 docs:
@@ -227,3 +229,22 @@ def test_validate_job_pins_snapstore_input(spark, tmp_path):
     # lineage records the pinned snapshot id
     ledger = spark.read.parquet(os.path.join(out, "ledger"))
     assert {r.snapshot_id for r in ledger.select("snapshot_id").collect()} == {"1"}
+
+
+def test_validate_job_rejects_partitions_below_one(tmp_path):
+    """--partitions is the N of pmod(xxhash64(repo), N): 0 would fail only at
+    the first action (REMAINDER_BY_ZERO) and a negative N would run with
+    buckets that are not the N the flag names, so argparse refuses both."""
+    from jobs import validate as vjob
+
+    for bad in ("0", "-3"):
+        with pytest.raises(SystemExit) as e:
+            vjob.main(
+                [
+                    "--input", str(tmp_path),
+                    "--out", str(tmp_path / "out"),
+                    "--snapshot-id", "1",
+                    "--partitions", bad,
+                ]
+            )
+        assert e.value.code == 2

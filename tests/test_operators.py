@@ -403,15 +403,30 @@ def test_embedding_near_duplicates_exact_copies(spark):
         (3, [0.501, 0.1, -0.2, 0.3]),    # near copy → cosine ~1
         (4, [-0.5, 0.4, 0.2, -0.3]),     # far from everything
         (5, [0.0, 0.0, 0.0, 0.0]),       # zero vector → never matches
+        # 6 and 7 share 1's LSH bucket, so only the exact verify decides them
+        (6, [0.5, 0.3, -0.2, 0.2]),      # cosine ~0.94 vs 1, 2, 3
+        (7, [0.3, 0.4, -0.2, 0.0]),      # cosine ~0.68 vs 1, 2, 3; ~0.89 vs 6
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {
-        (r.id1, r.id2)
-        for r in embedding_near_duplicates(df, "embedding", "vec_id").collect()
-    }
+
+    def pair_set(threshold_cents):
+        got = embedding_near_duplicates(
+            df, "embedding", "vec_id", threshold_cents=threshold_cents
+        ).collect()
+        return {(r.id1, r.id2) for r in got}
+
+    got = pair_set(90)
     assert (1, 2) in got
     assert (1, 3) in got and (2, 3) in got
     assert all(4 not in pair and 5 not in pair for pair in got)
+    # a same-bucket pair below the threshold never appears
+    assert {(1, 6), (2, 6), (3, 6)} <= got
+    assert all(7 not in pair for pair in got)
+    # the pair set grows monotonically as the threshold falls
+    p95, p60 = pair_set(95), pair_set(60)
+    assert p95 == {(1, 2), (1, 3), (2, 3)}
+    assert p95 <= got <= p60
+    assert {(1, 7), (2, 7), (3, 7), (6, 7)} <= p60
 
 
 def test_asof_join_semantics(spark):
@@ -696,39 +711,6 @@ def test_bucketed_ann_recall_floor(spark):
         bucketed_topk(emb, q, k=5, n_planes=4, multiprobe=False),
     ).collect()
     assert sum(x.recall for x in r1) / len(r1) <= mean_recall
-
-
-def test_ivf_ann_recall_beats_lsh_floor(spark):
-    """IVF(nprobe=3 of 8 cells, ~37% candidate volume) must reach mean
-    recall@5 >= 0.62 — the multi-probe LSH plateau it was built to beat
-    (round-2 verdict #5). Deterministic: 0.68 on sf0.01, 0.74 on sf0.001."""
-    from data_validator_guard_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        recall_at_k,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    r = recall_at_k(
-        brute_force_topk(emb, q, k=5),
-        ivf_topk(emb, q, k=5, n_clusters=8, nprobe=3, iters=1),
-    ).collect()
-    mean_recall = sum(x.recall for x in r) / len(r)
-    assert mean_recall >= 0.62, f"IVF recall below LSH plateau: {mean_recall}"
-
-
-def test_ivf_assignment_is_total_and_deterministic(spark):
-    """Every vector gets exactly one cell; two builds agree exactly (no RNG
-    anywhere in the index build)."""
-    from data_validator_guard_spark.operators.similarity import ivf_assignments
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a1 = {(r.vec_id, r.centroid_id) for r in ivf_assignments(emb).collect()}
-    a2 = {(r.vec_id, r.centroid_id) for r in ivf_assignments(emb).collect()}
-    assert a1 == a2
-    assert len(a1) == emb.count()
-    assert {c for _, c in a1} <= set(range(8))
 
 
 def test_simhash64_banded_near_duplicates(spark):
@@ -1063,35 +1045,6 @@ def test_exact_sim_key_orders_like_cosine(spark):
 
     want = [i for i, _ in sorted(cands, key=lambda t: (-cos(q, t[1]), t[0]))]
     assert got == want
-
-
-def test_ivf_recall_sweep_monotone_in_nprobe(spark):
-    """Round-3 verdict #7: the IVF knobs have measured semantics — for each
-    Lloyd depth, recall@5 is non-decreasing in nprobe (probing more cells
-    only ever adds candidates), and the shipped operating point
-    (nprobe=3, iters=1) stays at/above the multi-probe LSH plateau (0.62)."""
-    from data_validator_guard_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        recall_at_k,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, q, k=5)
-    recalls: dict[tuple[int, int], float] = {}
-    for iters in (0, 1, 2):
-        for nprobe in (1, 2, 3):
-            r = recall_at_k(
-                exact, ivf_topk(emb, q, k=5, n_clusters=8, nprobe=nprobe, iters=iters)
-            ).collect()
-            recalls[(iters, nprobe)] = sum(x.recall for x in r) / len(r)
-    for iters in (0, 1, 2):
-        assert recalls[(iters, 1)] <= recalls[(iters, 2)] <= recalls[(iters, 3)], (
-            f"recall not monotone in nprobe at iters={iters}: "
-            f"{[recalls[(iters, p)] for p in (1, 2, 3)]}"
-        )
-    assert recalls[(1, 3)] >= 0.62, f"shipped operating point fell: {recalls[(1, 3)]}"
 
 
 def test_hash_sample_nested_stable_and_unbiased(spark):
@@ -1941,29 +1894,6 @@ def test_apply_survivorship_keeps_best_copy(spark):
     assert got_min == [1, 7, 8]
 
 
-def test_ivf_recall_curve_monotone_and_operating_point(spark):
-    """Round-4 verdict #4: the cost-recall curve is monotone (probing more
-    cells only adds candidates, for BOTH recall and candidate count), the
-    full-probe end reaches recall 1.0 at candidate_frac 1.0, and the
-    shipped operating point nprobe=5 of 8 clears recall@5 >= 0.8."""
-    from data_validator_guard_spark.operators.similarity import ivf_recall_curve
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    rows = {
-        r.nprobe: r
-        for r in ivf_recall_curve(emb, q, k=5, n_clusters=8, iters=1).collect()
-    }
-    assert sorted(rows) == [1, 2, 3, 4, 5, 6, 7, 8]
-    for p in range(1, 8):
-        assert rows[p].recall <= rows[p + 1].recall + 1e-12
-        assert rows[p].n_candidates < rows[p + 1].n_candidates
-    assert rows[8].recall == 1.0
-    assert abs(rows[8].candidate_frac - 1.0) < 1e-12
-    assert rows[5].recall >= 0.8, f"operating point fell: {rows[5].recall}"
-    assert rows[5].candidate_frac < 0.7
-
-
 def test_salted_equijoin_spreads_full_duplicates_and_skips_maps(spark):
     """Round-4 advice: (a) rows that are FULL duplicates (identical in every
     column) must still spread across salts — the partition-id term, not the
@@ -2283,30 +2213,6 @@ def test_stratified_sample_skips_null_ids(spark):
     assert len(got) == 3 and all(r.id is not None for r in got)
 
 
-def test_recall_curve_reports_zero_candidate_points(spark):
-    """Review fix: an nprobe whose probed cells contain zero candidates must
-    appear on the curve with recall 0, not vanish — four well-separated
-    vectors, one cluster each: nprobe=1 probes only the query's own cell
-    (self excluded -> 0 candidates), nprobe=4 reaches everything."""
-    from data_validator_guard_spark.operators.similarity import ivf_recall_curve
-
-    vecs = [
-        (1, [1.0, 0.0]), (2, [0.0, 1.0]),
-        (3, [-1.0, 0.0]), (4, [0.0, -1.0]),
-    ]
-    corpus = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    curve = {
-        r.nprobe: r
-        for r in ivf_recall_curve(
-            corpus, corpus, "embedding", "vec_id",
-            k=1, n_clusters=4, nprobes=(1, 4), iters=2,
-        ).collect()
-    }
-    assert set(curve) == {1, 4}
-    assert curve[1].n_candidates == 0 and curve[1].recall == 0.0
-    assert curve[4].recall == 1.0
-
-
 def test_pii_redact_replaces_and_counts(spark):
     """Redaction is scan-consistent: n_redactions equals pii_scan's total,
     every structured match becomes its typed placeholder, and PII-free text
@@ -2351,44 +2257,6 @@ def test_pii_redact_replaces_and_counts(spark):
         F.sha2(F.lit("reach me: <EMAIL>"), 256).alias("h")
     ).collect()[0].h
     assert red[4].redacted_sha256 == h4
-
-
-def test_semantic_near_duplicates_planted(spark):
-    """SemDeDup invariants that hold for ANY cell assignment: identical
-    vectors always pair (same cell by exact-L2 determinism, cos = 1);
-    below-threshold pairs never appear regardless of cell; the pair set is
-    monotone in the threshold; max_cell=1 empties every cell."""
-    from data_validator_guard_spark.operators.similarity import (
-        semantic_near_duplicates,
-    )
-    from data_validator_guard_spark.session import unpersist_intermediates
-
-    base1 = [1.0] + [0.0] * 7
-    base2 = [0.0, 1.0] + [0.0] * 6
-    rows = [
-        (1, base1),
-        (2, base1),                       # exact dup of 1
-        (3, [0.99, 0.14] + [0.0] * 6),    # cos ~0.990 vs base1
-        (4, [0.70, 0.714] + [0.0] * 6),   # cos ~0.70 vs base1
-        (5, base2),
-        (6, base2),                       # exact dup of 5
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    def pair_set(t, **kw):
-        got = semantic_near_duplicates(
-            df, "embedding", "vec_id", n_clusters=2, iters=1,
-            threshold_cents=t, **kw,
-        ).collect()
-        return {(r.id1, r.id2) for r in got}
-
-    p95 = pair_set(95)
-    assert {(1, 2), (5, 6)} <= p95          # identical vectors: recall 1
-    assert (1, 4) not in p95 and (2, 4) not in p95  # cos 0.70 < 0.95
-    assert (1, 5) not in p95                 # orthogonal clusters
-    assert p95 <= pair_set(90)               # threshold monotonicity
-    assert pair_set(95, max_cell=1) == set()  # cap drops every cell
-    unpersist_intermediates()
 
 
 def test_remove_duplicate_segments_rebuild(spark):

@@ -54,6 +54,11 @@ def canon(rows, cols):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs = entrymod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query names: {', '.join(unknown)}")
+        return 1
     spark = get_session("oracle-check", master="local[8]")
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
@@ -61,7 +66,6 @@ def main() -> int:
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
